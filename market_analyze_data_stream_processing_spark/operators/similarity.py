@@ -83,6 +83,27 @@ def with_lsh_bucket(
 _SEED_CELL_CACHE: dict[object, dict] = {}
 
 
+def _observed_count_is_exact(top: DataFrame, n_seen: int, limit: int) -> bool:
+    """Whether a metric observed below ``top`` (a sort-and-limit that has
+    run) saw every input row. Under a full top-k pass it did: a
+    ``TakeOrderedAndProjectExec`` whose child is not already in the
+    requested order keeps a per-partition heap over all rows. An
+    ordered child makes it take the first ``limit`` rows per partition
+    instead, and other plans (an incremental take) stop once ``limit``
+    rows are in; in both a partition is cut short only after it has
+    yielded ``limit`` rows, so fewer than ``limit`` rows seen proves
+    every partition ran out."""
+    if n_seen < limit:
+        return True
+    plan = top._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    if plan.getClass().getSimpleName() != "TakeOrderedAndProjectExec":
+        return False
+    sort_order = top.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions.SortOrder
+    return not sort_order.orderingSatisfies(plan.child().outputOrdering(), plan.sortOrder())
+
+
 def build_seed_cell_index(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -111,6 +132,15 @@ def build_seed_cell_index(
       exactly-once (result-stage accumulator updates apply only to the
       first completion of each partition). The K formula on the exact
       count is the oracle's ``count(*)`` formula verbatim.
+
+    The observed count is exact only when every valid row reaches the
+    heap. Input already ordered by ``id_col`` breaks that: Spark then
+    takes the first ``max_cells`` rows of each partition, or turns the
+    sort-and-limit into an incremental take, and the metric counts only
+    the rows pulled. :func:`_observed_count_is_exact` reads the executed
+    plan, and a second job counts the valid rows exactly when it cannot
+    vouch for the metric — or when the metric is below the rows
+    collected, which no full pass can produce.
     """
     from pyspark.sql import Observation
 
@@ -120,15 +150,17 @@ def build_seed_cell_index(
     sumsq = F.aggregate(emb, F.lit(0.0), lambda acc, x: acc + x * x)
     valid = F.col(vec_col).isNotNull() & (sumsq > F.lit(0.0))
     obs = Observation()
-    seed_rows = (
+    top = (
         df.where(valid)
         .select(F.col(id_col).alias("i"), emb.alias("v"))
         .observe(obs, F.count(F.lit(1)).alias("n_valid"))
         .orderBy("i")
         .limit(max_cells)
-        .collect()
     )
+    seed_rows = top.collect()
     n_valid = int(obs.get["n_valid"])
+    if n_valid < len(seed_rows) or not _observed_count_is_exact(top, n_valid, max_cells):
+        n_valid = df.where(valid).count()
     k = max(1, min(max_cells, -(-n_valid // target_block)))
     return {
         "k": k,

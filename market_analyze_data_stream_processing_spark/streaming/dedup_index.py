@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import lsh_bands
@@ -47,16 +47,28 @@ def merge_near_dup_index(
     Within-batch ties keep the lowest id (deterministic replay).
     Accepted docs' band keys are appended to the index before return.
     """
-    bk = lsh_bands(
-        batch, id_col=id_col, text_col=text_col, n_hashes=n_hashes,
-        bands=bands, shingle_n=shingle_n,
-    ).withColumn("__bucket", F.pmod("h", F.lit(n_buckets)).cast("int"))
-    # One materialization: probed, self-joined, and appended below.
+    id_type = batch.schema[id_col].dataType.simpleString()
+    no_matches = spark.createDataFrame([], f"new_id {id_type}, existing_id {id_type}")
+    seen = Observation()
+    bk = (
+        lsh_bands(
+            batch, id_col=id_col, text_col=text_col, n_hashes=n_hashes,
+            bands=bands, shingle_n=shingle_n,
+        )
+        .withColumn("__bucket", F.pmod("h", F.lit(n_buckets)).cast("int"))
+        .observe(seen, F.collect_set("__bucket").alias("touched"))
+    )
+    # One materialization: probed, self-joined, and appended below. The
+    # touched-bucket set rides the same job as an observed metric.
     bk = bk.localCheckpoint()
+    touched = seen.get["touched"]
+    if not touched:
+        # No band keys (an empty batch, or only docs too short to
+        # shingle): nothing can collide and nothing joins the index.
+        return batch, no_matches
 
     # dup-vs-index: probe only touched buckets (partition-pruned scan)
     if os.path.exists(index_path):
-        touched = [r[0] for r in bk.select("__bucket").distinct().collect()]
         idx = spark.read.parquet(index_path).where(F.col("__bucket").isin(touched))
         vs_index = (
             bk.join(
@@ -66,10 +78,7 @@ def merge_near_dup_index(
             .select(F.col(id_col).alias("new_id"), "existing_id")
         )
     else:
-        vs_index = spark.createDataFrame(
-            [], f"new_id {batch.schema[id_col].dataType.simpleString()}, "
-            f"existing_id {batch.schema[id_col].dataType.simpleString()}"
-        )
+        vs_index = no_matches
 
     # dup-within-batch: keep the lowest id of each colliding band group.
     # Resolved with a per-group min AGGREGATE, not a pairwise self-join:
@@ -119,12 +128,15 @@ def stream_near_dup_filter(
     spark = stream.sparkSession
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # Emptiness rides the merge's band-key job as an observed count:
+        # an ``isEmpty()`` probe would be a job of its own.
+        rows = Observation()
         accepted, _ = merge_near_dup_index(
-            spark, batch_df, index_path, id_col=id_col, text_col=text_col
+            spark, batch_df.observe(rows, F.count(F.lit(1)).alias("n")), index_path,
+            id_col=id_col, text_col=text_col,
         )
-        accepted.write.mode("append").parquet(out_path)
+        if rows.get["n"]:
+            accepted.write.mode("append").parquet(out_path)
 
     writer = stream.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint

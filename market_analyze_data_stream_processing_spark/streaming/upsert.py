@@ -6,13 +6,54 @@ Chroma ``collection.upsert`` (consumer.py:176-181).
 Local implementation merges into hash-bucket-partitioned Parquet: the
 table is laid out as ``path/__bucket=NN/`` directories keyed by
 ``xxhash64(keys) % n_buckets``, and a micro-batch only READS and
-REWRITES the buckets its keys hash into (partition-pruned scan +
-dynamic partition overwrite). Untouched bucket directories are never
-opened — per-trigger I/O is O(batch ∧ touched buckets), not O(table),
+REWRITES the buckets its keys hash into (a scan of those bucket
+directories + dynamic partition overwrite). Untouched bucket directories
+are never opened — per-trigger I/O is O(batch ∧ touched buckets), not O(table),
 which is what makes a 60 s trigger viable against a 100 TB store. At
 production scale the identical ``keep_last_merge`` batch logic lands in
 a Delta/Iceberg MERGE INTO — the merge semantics are the contract, the
 table format is a deployment choice.
+
+Per-batch job budget. A merge into an existing table runs three Spark
+jobs and nothing else:
+
+1. the touched-bucket scan: one map-only job over the batch's key
+   columns, the bucket set observed as a ``collect_set`` metric (no
+   exchange, no reduce stage);
+2. the merge write: union of the touched buckets' files and the batch,
+   ONE hash exchange on ``__bucket``, the keep-last window over
+   ``(__bucket, *keys)`` inside it, dynamic-overwrite write — two jobs,
+   because AQE runs the shuffle map stage as a job of its own.
+
+Nothing else runs a job:
+
+- no emptiness probe. An empty batch shows up as an empty touched set,
+  and the merge returns before it reads or writes anything. The probe
+  (``isEmpty()``, a ``limit 1``) must never run on a frame that carries
+  pandas UDFs: its early stop closes the Arrow stream under the Python
+  workers, the daemon logs ``BrokenPipeError``, and every following job
+  forks and re-imports a fresh worker set instead of reusing the warm
+  one;
+- no schema inference. The batch's own schema is passed to the reader
+  whenever the parquet footers of the touched buckets (read on the
+  driver, no job) carry the same columns; only a table whose columns
+  differ falls back to Spark's inference job;
+- no eager pin. The touched set and the written rows must come from the
+  same data, but the bucket is a function of the keys alone: when the
+  optimized lineage of the key columns is visible and deterministic,
+  re-evaluating it in the write is safe and cheap (the scan prunes to
+  the key columns), and the batch is not pinned at all. Otherwise — a
+  non-deterministic key lineage, or one hidden under an RDD leaf, as
+  every ``foreachBatch`` micro-batch is — the batch is pinned lazily
+  (``localCheckpoint(eager=False)``) and the touched-bucket scan fills
+  the pin, so the batch, pandas UDFs included, is computed once.
+
+Pin-release rule: a pin is released through its own RDD (the one under
+the pinned frame's ``LogicalRDD``, found by the frame, not by id
+lookup) as soon as the write has finished or failed — never by diffing
+``getPersistentRDDs()`` around the merge, because the two sinks of one
+consumer cycle merge at the same time and a diff can catch the other
+query's pin.
 """
 
 from __future__ import annotations
@@ -20,8 +61,11 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import StructType
 
 from ..operators.analytics import keep_last
 
@@ -31,14 +75,25 @@ def keep_last_merge(
     incoming: DataFrame,
     keys: list[str],
     order: list[str],
+    cluster_by: str | None = None,
 ) -> DataFrame:
     """The merge kernel: union existing+incoming, keep the latest row per
-    key (W5 — the reference's ``~index.duplicated(keep='last')``)."""
+    key (W5 — the reference's ``~index.duplicated(keep='last')``).
+
+    ``cluster_by`` names a column that is a function of ``keys`` (the
+    upsert's ``__bucket``): the union is hash-partitioned on it and the
+    keep-last window runs over ``(cluster_by, *keys)``, which that
+    partitioning already satisfies — one exchange serves both the window
+    and a write partitioned by ``cluster_by``, where windowing on the
+    keys and then repartitioning would shuffle twice."""
     merged = (
         existing.unionByName(incoming, allowMissingColumns=True)
         if existing is not None
         else incoming
     )
+    if cluster_by is not None:
+        merged = merged.repartition(cluster_by)
+        keys = [cluster_by, *keys]
     return keep_last(merged, key=keys, order=order)
 
 
@@ -46,6 +101,72 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(
         F.xxhash64(*[F.col(k).cast("string") for k in keys]), F.lit(n_buckets)
     ).cast("int")
+
+
+def _needs_pin(keys: DataFrame) -> bool:
+    """Whether a batch must be pinned so that the touched-bucket scan and
+    the write read the same rows: when the optimized lineage of its key
+    columns (``keys``) is non-deterministic — evaluated twice it could
+    write a bucket that was never read-merged, a silent loss — or hidden
+    under an RDD leaf. A ``foreachBatch`` micro-batch is such a leaf:
+    its determinism cannot be seen, and recomputing it re-runs the whole
+    micro-batch plan, pandas UDFs included, where a visible lineage
+    would prune to the key columns."""
+    plan = keys._jdf.queryExecution().optimizedPlan()
+    if not plan.deterministic():
+        return True
+    leaves = plan.collectLeaves()
+    return any(
+        leaves.apply(i).getClass().getSimpleName() == "LogicalRDD" for i in range(leaves.size())
+    )
+
+
+def _touched_buckets(incoming: DataFrame) -> list[int]:
+    """The distinct ``__bucket`` values of a batch in one map-only job: an
+    observed ``collect_set`` is merged on the driver from the result
+    tasks' accumulators (once per partition), so there is no exchange
+    and no reduce stage; the noop sink runs the scan and writes nothing.
+    The set holds at most ``n_buckets`` values."""
+    seen = Observation()
+    (
+        incoming.select("__bucket")
+        .observe(seen, F.collect_set("__bucket").alias("b"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return sorted(seen.get["b"])
+
+
+def _bucket_files(path: str, buckets: list[int]) -> dict[int, set[str]]:
+    """File names in each existing ``__bucket=b`` directory."""
+    out = {}
+    for b in buckets:
+        d = os.path.join(path, f"__bucket={b}")
+        if os.path.isdir(d):
+            out[b] = set(os.listdir(d))
+    return out
+
+
+def _stored_schema_matches(path: str, files: dict[int, set[str]], schema: StructType) -> bool:
+    """Whether the parquet footers of the touched buckets carry exactly
+    the data columns of ``schema`` (the partition column lives in the
+    directory name). One footer per bucket: a dynamic overwrite replaces
+    a bucket directory as a whole, so its files share one write's
+    schema."""
+    want = {f.name: f.dataType.simpleString() for f in schema if f.name != "__bucket"}
+    for b, names in files.items():
+        parts = sorted(n for n in names if n.endswith(".parquet"))
+        if not parts:
+            continue
+        stored = pq.read_schema(os.path.join(path, f"__bucket={b}", parts[0]))
+        try:
+            got = {f.name: from_arrow_type(f.type).simpleString() for f in stored}
+        except TypeError:  # an Arrow type Spark has no name for
+            return False
+        if got != want:
+            return False
+    return True
 
 
 def upsert_parquet(
@@ -61,11 +182,20 @@ def upsert_parquet(
     keep-last-per-key semantics + optional retention trim (X6).
 
     Scale shape: only the ≤``n_buckets`` partitions containing incoming
-    keys are read (partition-pruned scan on the ``__bucket`` directory
-    column) and only those are replaced (dynamic partition overwrite) —
+    keys are listed and read (their ``__bucket=NN`` directories) and
+    only those are replaced (dynamic partition overwrite) —
     per-batch I/O is proportional to the touched buckets, never the
     whole table, and the table path always exists (no reader-visible
     swap window; the commit protocol stages and renames per partition).
+
+    Job budget (module docstring): a map-only touched-bucket scan and
+    one single-exchange write, three jobs under AQE; no emptiness probe,
+    no schema-inference job while the stored columns match, and no pin
+    unless the key columns' lineage is non-deterministic or hidden under
+    an RDD leaf (a ``foreachBatch`` micro-batch). A batch with
+    no rows writes nothing, and as the first batch of a new path creates
+    no directory. A pin is released through its own RDD once the write
+    is done, whether or not it succeeded.
 
     Idempotent for replayed batches (same rows → same keep-last
     outcome), which is what makes checkpointed foreachBatch exactly-once
@@ -76,49 +206,41 @@ def upsert_parquet(
     job (at scale: a date-partition drop, see ``retention_filter``).
     """
     incoming = incoming.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-    touched: list[int] | None = None
-    existing = None
-    if os.path.exists(path):
-        # Materialize the batch ONCE so the touched-bucket set and the
-        # written rows come from the same data — a non-deterministic
-        # incoming frame evaluated twice could write a bucket that was
-        # never read-merged (silent data loss).
-        incoming = incoming.localCheckpoint()
-        touched = [r[0] for r in incoming.select("__bucket").distinct().collect()]
-        existing = spark.read.parquet(path).where(F.col("__bucket").isin(touched))
-    merged = keep_last_merge(existing, incoming, keys, order)
-    if retention_predicate is not None:
-        merged = merged.where(retention_predicate)
-    survived: set[int] | None = None
-    if touched and retention_predicate is not None:
-        # The survived-bucket set must be computed BEFORE the overwrite:
-        # `merged`'s plan scans the pre-write file listing of `path`, and
-        # re-executing it after dynamic overwrite has replaced those files
-        # fails with FILE_NOT_EXIST on any partially-trimmed bucket.
-        # Persist so the write below reuses this materialization.
-        merged = merged.persist()
-        survived = {r[0] for r in merged.select("__bucket").distinct().collect()}
-    (
-        merged.repartition("__bucket")
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-    if survived is not None:
-        # Dynamic overwrite only replaces partitions present in the output:
-        # a touched bucket whose every row was retention-trimmed (the only
-        # way a touched bucket can vanish — a keep-last merge always emits
-        # ≥1 row per incoming key) would keep its stale directory, so drop
-        # those explicitly (≤n_buckets dirs).
-        left = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("__bucket=")
-        }
-        for b in set(touched) & left - survived:
-            shutil.rmtree(os.path.join(path, f"__bucket={b}"), ignore_errors=True)
-        merged.unpersist()
+    pin = None
+    if _needs_pin(incoming.select("__bucket")):
+        incoming = incoming.localCheckpoint(eager=False)
+        pin = incoming._jdf.queryExecution().analyzed().rdd()
+    try:
+        touched = _touched_buckets(incoming)
+        if not touched:
+            return
+        files = _bucket_files(path, touched)
+        existing = None
+        if files:
+            reader = spark.read.option("basePath", path)
+            if _stored_schema_matches(path, files, incoming.schema):
+                reader = reader.schema(incoming.schema)
+            existing = reader.parquet(*[os.path.join(path, f"__bucket={b}") for b in files])
+        merged = keep_last_merge(existing, incoming, keys, order, cluster_by="__bucket")
+        if retention_predicate is not None:
+            merged = merged.where(retention_predicate)
+        (
+            merged.write.mode("overwrite")
+            .partitionBy("__bucket")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
+    finally:
+        if pin is not None:
+            pin.unpersist(False)
+    # Dynamic overwrite only replaces the buckets present in the output,
+    # each under new file names. A touched bucket whose every row was
+    # retention-trimmed (the only way one can vanish: a keep-last merge
+    # emits ≥1 row per incoming key) still holds its old files; drop it.
+    for b, names in files.items():
+        d = os.path.join(path, f"__bucket={b}")
+        if set(os.listdir(d)) == names:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_upsert_parquet(
@@ -143,8 +265,6 @@ def stream_upsert_parquet(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.withColumn(
             "__batch_id", F.lit(batch_id).cast("long")
         ).withColumn("__row_seq", F.monotonically_increasing_id())

@@ -664,12 +664,21 @@ def test_connected_components_raises_rather_than_truncates(spark):
 def test_incremental_near_dup_index_batches(spark, tmp_path):
     """Batch 2 near-dups of batch-1 docs must be rejected by the stored
     band index WITHOUT rescanning batch-1 text; within-batch copies keep
-    the lowest id; fresh docs pass and extend the index."""
+    the lowest id; fresh docs pass and extend the index. An empty batch
+    before them leaves no index behind."""
     from market_analyze_data_stream_processing_spark.streaming.dedup_index import (
         merge_near_dup_index,
     )
 
+    import os
+
     idx = str(tmp_path / "band_index")
+    # an empty batch has no band keys: nothing accepted, and no index
+    # directory that a later probe would fail to read
+    b0 = spark.createDataFrame([], "doc_id long, text string")
+    acc0, m0 = merge_near_dup_index(spark, b0, idx)
+    assert acc0.count() == 0 and m0.count() == 0
+    assert not os.path.exists(idx)
     b1 = spark.createDataFrame(
         [(0, BASE), (1, FAR), (2, BASE)], ["doc_id", "text"]  # 2 dups 0
     )
@@ -1132,6 +1141,27 @@ def test_seed_cell_index_build_is_one_job(spark):
     # observed count, seeds = the K smallest-id valid rows
     assert idx["k"] == 4
     assert [i for i, _v in idx["seeds"]] == [1, 2, 3, 4]
+
+
+def test_seed_cell_index_counts_already_sorted_input_exactly(spark):
+    """ADVICE r15 #1: n_valid rides the top-k job as an observed metric,
+    which is exact only under a full heap pass. Input already in id
+    order lets Spark stop early — each partition of a ``range`` yields
+    just its first ``max_cells`` rows, and a globally sorted frame runs
+    as an incremental take — so the metric undercounts (512 of 1000
+    here) and K shrinks. The build must notice and count exactly."""
+    from market_analyze_data_stream_processing_spark.operators.similarity import (
+        build_seed_cell_index,
+    )
+
+    base = spark.range(0, 1000, numPartitions=4).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+    for name, df in (("ordered partitions", base), ("globally sorted", base.orderBy("vec_id"))):
+        idx = build_seed_cell_index(df, target_block=100, max_cells=128)
+        assert idx["k"] == 10, (name, idx["k"])  # ceil(1000 valid / 100)
+        assert [i for i, _v in idx["seeds"]] == list(range(10)), name
 
 
 def test_seed_cell_index_save_load_roundtrip(spark, tmp_path):

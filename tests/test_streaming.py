@@ -209,6 +209,150 @@ def test_upsert_retention_partial_trim_of_touched_bucket(spark, tmp_path):
     assert os.path.exists(os.path.join(path, "__bucket=0"))
 
 
+def _bucket_snapshot(path):
+    import glob
+    import os
+
+    return {
+        f: (os.stat(f).st_mtime_ns, os.path.getsize(f))
+        for f in glob.glob(f"{path}/**/*", recursive=True)
+    }
+
+
+def test_upsert_merge_plans_one_exchange_within_a_three_job_budget(spark, tmp_path):
+    """Pins the per-batch job budget of ``upsert_parquet``: a merge into
+    an existing table is one map-only touched-bucket scan plus one write
+    whose plan has exactly ONE shuffle exchange, between the union and
+    the write (``repartition(__bucket)`` serves both the keep-last
+    window and the per-bucket files) — three jobs, the write's shuffle
+    map stage counting as one under AQE. A regression back to the
+    window-then-repartition form shows up as a second Exchange; one
+    back to a probe, an eager pin or a schema-inference read shows up
+    as extra jobs."""
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([(f"k{i}", 1, float(i)) for i in range(40)], ["k", "seq", "v"])
+    upsert_parquet(spark, base, path, keys=["k"], order=["seq"], n_buckets=8)
+
+    sc = spark.sparkContext
+    group, desc = "upsert-job-budget", "one merge into an existing table"
+    sc.setJobGroup(group, desc)
+    try:
+        inc = spark.createDataFrame(
+            [("k0", 2, 99.0), ("k7", 2, 7.5), ("new", 1, 1.0)], ["k", "seq", "v"]
+        )
+        upsert_parquet(spark, inc, path, keys=["k"], order=["seq"], n_buckets=8)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 3, f"expected 3 jobs per merge, saw {len(jobs)}: {jobs}"
+
+    # the SQL executions of the merge carry the job group's description;
+    # the status store keeps the newest ones, oldest first
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 20), min(20, n))
+    writes = []
+    for i in range(execs.length()):
+        if execs.apply(i).description() != desc:
+            continue
+        nodes = store.planGraph(execs.apply(i).executionId()).allNodes()
+        names = [nodes.apply(j).name() for j in range(nodes.length())]
+        if "WriteFiles" in names:
+            writes.append(names)
+    assert len(writes) == 1, writes
+    names = writes[0]  # pre-order: the write, then its subtree
+    assert names.count("Exchange") == 1, names
+    assert names.index("WriteFiles") < names.index("Exchange") < names.index("Union"), names
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert len(got) == 41 and got["k0"] == 99.0 and got["k7"] == 7.5 and got["new"] == 1.0
+
+
+def test_upsert_empty_batch_writes_nothing(spark, tmp_path):
+    """The guarantee the ``isEmpty()`` probe gave, now carried by the
+    empty touched-bucket set: a batch whose rows are all filtered out
+    leaves an existing table byte-identical, and as the first batch of
+    a new path — directly or as a streaming micro-batch — creates no
+    table directory."""
+    import os
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([("a", 1, 10.0), ("b", 1, 20.0)], ["k", "seq", "v"])
+    upsert_parquet(spark, df, path, keys=["k"], order=["seq"], n_buckets=4)
+    before = _bucket_snapshot(path)
+    none = df.where(F.col("v") > 1e9)
+    upsert_parquet(spark, none, path, keys=["k"], order=["seq"], n_buckets=4)
+    assert _bucket_snapshot(path) == before
+
+    fresh = str(tmp_path / "fresh")
+    upsert_parquet(spark, none, fresh, keys=["k"], order=["seq"])
+    assert not os.path.exists(fresh)
+
+    src = tmp_path / "in_empty"
+    src.mkdir()
+    (src / "f.json").write_text(json.dumps({"k": "A", "seq": 1, "v": 10.0}))
+    stream = spark.readStream.schema("k string, seq long, v double").json(str(src))
+    q = stream_upsert_parquet(
+        stream.where(F.col("v") < 0), str(tmp_path / "sfresh"), keys=["k"], order=["seq"],
+        checkpoint=str(tmp_path / "cp_empty"), trigger_once=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert not os.path.exists(str(tmp_path / "sfresh"))
+
+
+def test_upsert_releases_its_pin(spark, tmp_path):
+    """A batch is pinned for the merge when the touched-bucket scan and
+    the write could otherwise read different rows — a non-deterministic
+    key lineage, or a ``foreachBatch`` micro-batch whose lineage hides
+    under an RDD leaf — and the pin is released afterwards: after three
+    merges of either kind the set of persistent RDD ids is what it was
+    before them. The released pins still did their job: every key is
+    stored once, with its latest value."""
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    def batch(seed):
+        return spark.range(30).select(
+            F.concat(F.lit("k"), (F.rand(seed) * 12).cast("int").cast("string")).alias("k"),
+            F.col("id").alias("seq"),
+            F.lit(float(seed)).alias("v"),
+        )
+
+    assert not batch(0).select("k")._jdf.queryExecution().optimizedPlan().deterministic()
+    path = str(tmp_path / "t")
+    before = persistent()
+    for seed in range(3):
+        upsert_parquet(spark, batch(seed), path, keys=["k"], order=["seq"], n_buckets=4)
+    assert persistent() == before
+    keys = [r["k"] for r in spark.read.parquet(path).collect()]
+    assert len(keys) == len(set(keys))
+
+    src = tmp_path / "in_pin"
+    src.mkdir()
+    for i in range(3):  # one file per micro-batch
+        (src / f"f{i}.json").write_text("\n".join(
+            json.dumps({"k": k, "seq": i, "v": float(10 * i + j)})
+            for j, k in enumerate(["A", "B", f"C{i}"])
+        ))
+    stream = (
+        spark.readStream.schema("k string, seq long, v double")
+        .option("maxFilesPerTrigger", 1).json(str(src))
+    )
+    before = persistent()
+    q = stream_upsert_parquet(
+        stream, str(tmp_path / "s"), keys=["k"], order=["seq"],
+        checkpoint=str(tmp_path / "cp_pin"), trigger_once=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None and len(q.recentProgress) == 3
+    assert persistent() == before
+    got = {r["k"]: r["v"] for r in spark.read.parquet(str(tmp_path / "s")).collect()}
+    assert got == {"A": 20.0, "B": 21.0, "C0": 2.0, "C1": 12.0, "C2": 22.0}
+
+
 def test_keep_last_merge_prefers_incoming_on_higher_seq(spark):
     old = spark.createDataFrame([("A", 1, 10.0)], ["k", "seq", "v"])
     new = spark.createDataFrame([("A", 2, 99.0), ("B", 1, 5.0)], ["k", "seq", "v"])
