@@ -1,20 +1,11 @@
 """Enrichment UDF stage (SURVEY.md §2.10 U1/U3/U4): embedding, sentiment,
 translation — the reference's per-row model calls (consumer.py:160-172)
-re-expressed as Arrow-batched UDFs.
+re-expressed as Arrow-batched pandas UDFs.
 
 The reference calls SentenceTransformer/VADER/GoogleTranslator one row at
 a time — its central scalability defect. Here each is a vectorized
-UDF: at 100 TB the models are loaded once per executor (lazy
+pandas_udf: at 100 TB the models are loaded once per executor (lazy
 module-level init inside the UDF) and fed Arrow batches.
-
-Embedding and sentiment are Arrow-native UDFs (``arrow_udf``): the
-models still compute on pandas, but the embedding vectors go back to
-the JVM as one flat float buffer. A pandas UDF returning
-``array<float>`` has Spark convert every vector to a Python list of
-float objects first (~12 KB per 384-dim row); a reused Python worker
-keeps the peak of the largest batch it ever converted. Both UDFs share
-one evaluation type, so Spark evaluates them in one Python runner per
-task.
 
 Determinism seams (SURVEY §5.4): real models aren't in this container,
 so each UDF has a deterministic stand-in with the same signature and
@@ -28,7 +19,6 @@ import re
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, StringType
 
@@ -68,24 +58,15 @@ def _try_real_encoder():
         return None
 
 
-def _float_lists(vecs: pd.Series) -> pa.Array:
-    """Float vectors as an Arrow ``list<float>`` array, built from one
-    flat float32 buffer and the row offsets."""
-    offsets = np.zeros(len(vecs) + 1, dtype=np.int32)
-    np.cumsum([len(v) for v in vecs], out=offsets[1:])
-    flat = np.concatenate(vecs.tolist()) if len(vecs) else np.zeros(0)
-    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat.astype(np.float32)))
-
-
 def make_embedding_udf(use_real_model: bool = False):
     """U1: ``encode(f"{ticker}: {title}")`` → 384-dim vector
-    (consumer.py:171-172). arrow_udf, Arrow-batched."""
+    (consumer.py:171-172). pandas_udf, Arrow-batched."""
     real = _try_real_encoder() if use_real_model else None
     fn = real or _hash_projection_embed
 
-    @F.arrow_udf(ArrayType(FloatType()))
-    def embed(texts: pa.Array) -> pa.Array:
-        return _float_lists(fn(texts.to_pandas()))
+    @F.pandas_udf(ArrayType(FloatType()))
+    def embed(texts: pd.Series) -> pd.Series:
+        return fn(texts)
 
     return embed
 
@@ -135,9 +116,9 @@ def make_sentiment_udf(use_real_model: bool = True):
     real = _try_real_vader() if use_real_model else None
     fn = real or _lexicon_sentiment
 
-    @F.arrow_udf(DoubleType())
-    def sentiment(texts: pa.Array) -> pa.Array:
-        return pa.array(fn(texts.to_pandas()), type=pa.float64())
+    @F.pandas_udf(DoubleType())
+    def sentiment(texts: pd.Series) -> pd.Series:
+        return fn(texts)
 
     return sentiment
 

@@ -17,9 +17,9 @@ table format is a deployment choice.
 Per-batch job budget. A merge into an existing table runs three Spark
 jobs and nothing else:
 
-1. the touched-bucket scan: one map-only job over the batch's key
-   columns, the bucket set observed as a ``collect_set`` metric (no
-   exchange, no reduce stage);
+1. the touched-bucket scan: one map-only job over the batch, the bucket
+   set observed as a ``collect_set`` metric (no exchange, no reduce
+   stage);
 2. the merge write: union of the touched buckets' files and the batch,
    ONE hash exchange on ``__bucket``, the keep-last window over
    ``(__bucket, *keys)`` inside it, dynamic-overwrite write — two jobs,
@@ -34,19 +34,17 @@ Nothing else runs a job:
   workers, the daemon logs ``BrokenPipeError``, and every following job
   forks and re-imports a fresh worker set instead of reusing the warm
   one;
-- no schema inference. The batch's own schema is passed to the reader
-  whenever the parquet footers of the touched buckets (read on the
-  driver, no job) carry the same columns; only a table whose columns
-  differ falls back to Spark's inference job;
+- no schema inference. Spark writes the table's schema into every
+  parquet footer; the reader is given the schema stored in one footer
+  of the touched buckets (read on the driver, no job), exactly the one
+  Spark's inference would return. Only a footer without it (a file
+  Spark did not write) falls back to the inference job;
 - no eager pin. The touched set and the written rows must come from the
-  same data, but the bucket is a function of the keys alone: when the
-  optimized lineage of the key columns is visible and deterministic,
-  re-evaluating it in the write is safe and cheap (the scan prunes to
-  the key columns), and the batch is not pinned at all. Otherwise — a
-  non-deterministic key lineage, or one hidden under an RDD leaf, as
-  every ``foreachBatch`` micro-batch is — the batch is pinned lazily
-  (``localCheckpoint(eager=False)``) and the touched-bucket scan fills
-  the pin, so the batch, pandas UDFs included, is computed once.
+  same data — a batch evaluated twice could differ and write a bucket
+  that was never read-merged, a silent loss — so the batch is pinned,
+  lazily (``localCheckpoint(eager=False)`` runs no job): the
+  touched-bucket scan fills the pin, and the write reads it. The batch,
+  pandas UDFs included, is computed once.
 
 Pin-release rule: a pin is released through its own RDD (the one under
 the pinned frame's ``LogicalRDD``, found by the frame, not by id
@@ -58,16 +56,19 @@ query's pin.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_type
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from ..operators.analytics import keep_last
+
+#: Footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def keep_last_merge(
@@ -75,25 +76,14 @@ def keep_last_merge(
     incoming: DataFrame,
     keys: list[str],
     order: list[str],
-    cluster_by: str | None = None,
 ) -> DataFrame:
     """The merge kernel: union existing+incoming, keep the latest row per
-    key (W5 — the reference's ``~index.duplicated(keep='last')``).
-
-    ``cluster_by`` names a column that is a function of ``keys`` (the
-    upsert's ``__bucket``): the union is hash-partitioned on it and the
-    keep-last window runs over ``(cluster_by, *keys)``, which that
-    partitioning already satisfies — one exchange serves both the window
-    and a write partitioned by ``cluster_by``, where windowing on the
-    keys and then repartitioning would shuffle twice."""
+    key (W5 — the reference's ``~index.duplicated(keep='last')``)."""
     merged = (
         existing.unionByName(incoming, allowMissingColumns=True)
         if existing is not None
         else incoming
     )
-    if cluster_by is not None:
-        merged = merged.repartition(cluster_by)
-        keys = [cluster_by, *keys]
     return keep_last(merged, key=keys, order=order)
 
 
@@ -101,24 +91,6 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(
         F.xxhash64(*[F.col(k).cast("string") for k in keys]), F.lit(n_buckets)
     ).cast("int")
-
-
-def _needs_pin(keys: DataFrame) -> bool:
-    """Whether a batch must be pinned so that the touched-bucket scan and
-    the write read the same rows: when the optimized lineage of its key
-    columns (``keys``) is non-deterministic — evaluated twice it could
-    write a bucket that was never read-merged, a silent loss — or hidden
-    under an RDD leaf. A ``foreachBatch`` micro-batch is such a leaf:
-    its determinism cannot be seen, and recomputing it re-runs the whole
-    micro-batch plan, pandas UDFs included, where a visible lineage
-    would prune to the key columns."""
-    plan = keys._jdf.queryExecution().optimizedPlan()
-    if not plan.deterministic():
-        return True
-    leaves = plan.collectLeaves()
-    return any(
-        leaves.apply(i).getClass().getSimpleName() == "LogicalRDD" for i in range(leaves.size())
-    )
 
 
 def _touched_buckets(incoming: DataFrame) -> list[int]:
@@ -148,25 +120,19 @@ def _bucket_files(path: str, buckets: list[int]) -> dict[int, set[str]]:
     return out
 
 
-def _stored_schema_matches(path: str, files: dict[int, set[str]], schema: StructType) -> bool:
-    """Whether the parquet footers of the touched buckets carry exactly
-    the data columns of ``schema`` (the partition column lives in the
-    directory name). One footer per bucket: a dynamic overwrite replaces
-    a bucket directory as a whole, so its files share one write's
-    schema."""
-    want = {f.name: f.dataType.simpleString() for f in schema if f.name != "__bucket"}
-    for b, names in files.items():
+def _stored_schema(path: str, files: dict[int, set[str]]) -> StructType | None:
+    """The data schema Spark's parquet inference would return for the
+    touched buckets, without its job: the schema Spark serialized into
+    the footer of the first data file (inference also reads one footer
+    and prefers that same entry), or None when the footer has none.
+    The partition column lives in the directory name, not the file."""
+    for b, names in sorted(files.items()):
         parts = sorted(n for n in names if n.endswith(".parquet"))
-        if not parts:
-            continue
-        stored = pq.read_schema(os.path.join(path, f"__bucket={b}", parts[0]))
-        try:
-            got = {f.name: from_arrow_type(f.type).simpleString() for f in stored}
-        except TypeError:  # an Arrow type Spark has no name for
-            return False
-        if got != want:
-            return False
-    return True
+        if parts:
+            meta = pq.read_metadata(os.path.join(path, f"__bucket={b}", parts[0])).metadata
+            stored = (meta or {}).get(_SPARK_SCHEMA_KEY)
+            return StructType.fromJson(json.loads(stored)) if stored else None
+    return None
 
 
 def upsert_parquet(
@@ -190,12 +156,11 @@ def upsert_parquet(
 
     Job budget (module docstring): a map-only touched-bucket scan and
     one single-exchange write, three jobs under AQE; no emptiness probe,
-    no schema-inference job while the stored columns match, and no pin
-    unless the key columns' lineage is non-deterministic or hidden under
-    an RDD leaf (a ``foreachBatch`` micro-batch). A batch with
-    no rows writes nothing, and as the first batch of a new path creates
-    no directory. A pin is released through its own RDD once the write
-    is done, whether or not it succeeded.
+    no schema-inference job for files Spark wrote, and a lazy pin that
+    the touched-bucket scan fills. A batch with no rows writes nothing,
+    and as the first batch of a new path creates no directory. The pin
+    is released through its own RDD once the write is done, whether or
+    not it succeeded.
 
     Idempotent for replayed batches (same rows → same keep-last
     outcome), which is what makes checkpointed foreachBatch exactly-once
@@ -205,23 +170,28 @@ def upsert_parquet(
     of the merge; a full-table retention sweep is a separate maintenance
     job (at scale: a date-partition drop, see ``retention_filter``).
     """
-    incoming = incoming.withColumn("__bucket", _bucket_expr(keys, n_buckets))
-    pin = None
-    if _needs_pin(incoming.select("__bucket")):
-        incoming = incoming.localCheckpoint(eager=False)
-        pin = incoming._jdf.queryExecution().analyzed().rdd()
+    incoming = incoming.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(
+        eager=False
+    )
+    pin = incoming._jdf.queryExecution().analyzed().rdd()
     try:
         touched = _touched_buckets(incoming)
         if not touched:
             return
         files = _bucket_files(path, touched)
-        existing = None
+        merged = incoming
         if files:
             reader = spark.read.option("basePath", path)
-            if _stored_schema_matches(path, files, incoming.schema):
-                reader = reader.schema(incoming.schema)
+            stored = _stored_schema(path, files)
+            if stored is not None:
+                reader = reader.schema(stored.add("__bucket", IntegerType()))
             existing = reader.parquet(*[os.path.join(path, f"__bucket={b}") for b in files])
-        merged = keep_last_merge(existing, incoming, keys, order, cluster_by="__bucket")
+            merged = existing.unionByName(incoming, allowMissingColumns=True)
+        # __bucket is a function of the keys: one exchange on it serves
+        # both the keep-last window over (__bucket, *keys) and the
+        # per-bucket write, where windowing on the keys and then
+        # repartitioning would shuffle twice.
+        merged = keep_last(merged.repartition("__bucket"), key=["__bucket", *keys], order=order)
         if retention_predicate is not None:
             merged = merged.where(retention_predicate)
         (
@@ -231,8 +201,7 @@ def upsert_parquet(
             .parquet(path)
         )
     finally:
-        if pin is not None:
-            pin.unpersist(False)
+        pin.unpersist(False)
     # Dynamic overwrite only replaces the buckets present in the output,
     # each under new file names. A touched bucket whose every row was
     # retention-trimmed (the only way one can vanish: a keep-last merge

@@ -268,6 +268,42 @@ def test_upsert_merge_plans_one_exchange_within_a_three_job_budget(spark, tmp_pa
     assert len(got) == 41 and got["k0"] == 99.0 and got["k7"] == 7.5 and got["new"] == 1.0
 
 
+def test_upsert_reads_the_schema_spark_would_infer(spark, tmp_path):
+    """The merge passes the reader the schema Spark stored in a parquet
+    footer instead of running inference: after merges with a timestamp,
+    a decimal and a float array the table reads back with the schema
+    Spark infers, and the values survive. A bucket whose file Spark did
+    not write (no stored schema) falls back to inference."""
+    import datetime as dt
+    import os
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = "k string, seq long, ts timestamp, amt decimal(12,2), emb array<float>"
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5)
+    path = str(tmp_path / "t")
+    rows = [(f"k{i}", 1, t0, Decimal("1.25"), [1.0, float(i)]) for i in range(6)]
+    upsert_parquet(spark, spark.createDataFrame(rows, schema), path, keys=["k"],
+                   order=["seq"], n_buckets=2)
+    inferred = spark.read.parquet(path).schema
+    inc = spark.createDataFrame([("k0", 2, t0, Decimal("9.50"), [2.0])], schema)
+    upsert_parquet(spark, inc, path, keys=["k"], order=["seq"], n_buckets=2)
+    out = spark.read.parquet(path)
+    assert out.schema == inferred
+    got = {r["k"]: r for r in out.collect()}
+    assert len(got) == 6 and got["k0"]["amt"] == Decimal("9.50") and got["k0"]["ts"] == t0
+
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(f"{foreign}/__bucket=0")
+    pq.write_table(pa.table({"k": ["a"], "seq": [1], "v": [1.0]}),
+                   f"{foreign}/__bucket=0/part-0.parquet")
+    new = spark.createDataFrame([("a", 2, 5.0)], "k string, seq long, v double")
+    upsert_parquet(spark, new, foreign, keys=["k"], order=["seq"], n_buckets=1)
+    assert [tuple(r) for r in spark.read.parquet(foreign).select("k", "v").collect()] == [("a", 5.0)]
+
+
 def test_upsert_empty_batch_writes_nothing(spark, tmp_path):
     """The guarantee the ``isEmpty()`` probe gave, now carried by the
     empty touched-bucket set: a batch whose rows are all filtered out
@@ -302,13 +338,13 @@ def test_upsert_empty_batch_writes_nothing(spark, tmp_path):
 
 
 def test_upsert_releases_its_pin(spark, tmp_path):
-    """A batch is pinned for the merge when the touched-bucket scan and
-    the write could otherwise read different rows — a non-deterministic
-    key lineage, or a ``foreachBatch`` micro-batch whose lineage hides
-    under an RDD leaf — and the pin is released afterwards: after three
-    merges of either kind the set of persistent RDD ids is what it was
-    before them. The released pins still did their job: every key is
-    stored once, with its latest value."""
+    """Every batch is pinned for the merge, so the touched-bucket scan
+    and the write read the same rows even when a second evaluation
+    would differ (here a random key), and the pin is released
+    afterwards: after three merges — direct, or as ``foreachBatch``
+    micro-batches — the set of persistent RDD ids is what it was before
+    them. The released pins still did their job: every key is stored
+    once, with its latest value."""
     sc = spark.sparkContext
 
     def persistent():
