@@ -7,6 +7,7 @@ pipeline. See SURVEY.md for the operator inventory this implements.
 
 Layout:
     session     SparkSession factory tuned for local[N] testing, scale-aware defaults
+    cache       process-level build-once caches (restart-safe, LRU-bounded)
     schemas     StructTypes for the 4 topic payloads + prices/docs tables
     sources/    parquet/CSV/JSON-topic readers & normalizers
     functions/  scalar expression builders (pct-change, decay, text, vectors)

@@ -83,18 +83,6 @@ def money_round(sum_col: Column, digits: int = 2) -> Column:
     return F.round(sum_col, digits).cast("double")
 
 
-def gateway_id() -> str | None:
-    """Identity of the live Py4J gateway (the SparkContext's
-    applicationId; None when no context is active). Expression memos
-    key on it so a JVM restarted in the same Python process can never
-    be served dead JavaObject references — applicationIds are unique
-    per context where Python object ids can be reused."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return sc.applicationId if sc is not None else None
-
-
 def numeric_assert_enabled() -> bool:
     return os.environ.get(NUMERIC_ASSERT_ENV, "") not in ("", "0")
 

@@ -14,39 +14,22 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import cache
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-# Literal-vector expression memo (round 15, the operators/stats.py
-# _KERNEL_MEMO discipline): one 64-dim lit_vector costs ~65 Py4J
-# roundtrips, and the kNN/ANN/retrieval family rebuilds the SAME query
-# vector / hyperplane literals on every plan build (cProfile put ~60%
-# of a warm q_ann_lsh build in expression-construction roundtrips).
-# Unresolved Columns are immutable, input-independent descriptors;
-# keyed by the float tuple + the gateway applicationId so a restarted
-# JVM can never be served dead Py4J references. BOUNDED: lit_vector is
-# also called with data-dependent vectors (fresh k-means centroids
-# every run), so an unbounded dict would accumulate never-hit entries
-# (each holding JVM Literal refs) for the process lifetime — on
-# overflow the memo drops its oldest half (dict preserves insertion
-# order), which also sheds dead-gateway entries over time.
-_LIT_MEMO: dict[tuple, Column] = {}
-_LIT_MEMO_MAX = 512
-
-
 def lit_vector(values: Sequence[float]) -> Column:
-    from .scalars import gateway_id
-
-    key = (gateway_id(), tuple(float(v) for v in values))
-    hit = _LIT_MEMO.get(key)
-    if hit is None:
-        if len(_LIT_MEMO) >= _LIT_MEMO_MAX:
-            for stale in list(_LIT_MEMO)[: _LIT_MEMO_MAX // 2]:
-                del _LIT_MEMO[stale]
-        hit = _LIT_MEMO[key] = F.array(*[F.lit(v) for v in key[1]])
-    return hit
+    """An ``array<double>`` literal, memoized per float tuple (``cache``
+    kind ``lit``). One 64-dim literal costs ~65 Py4J round trips, and the
+    kNN/ANN/retrieval family rebuilds the same query-vector and
+    hyperplane literals on every plan build. It is also called with
+    data-dependent vectors (fresh k-means centroids every run), which
+    the kind's LRU bound sheds."""
+    key = tuple(float(v) for v in values)
+    return cache.get("lit", key, lambda: F.array(*[F.lit(v) for v in key]))
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -92,21 +92,6 @@ def minhash_signatures(
     )
 
 
-def minhash_signature_fast(
-    text: Column, n_hashes: int = 8, shingle_n: int = 3
-) -> Column:
-    """Engine-path signature: array<long> of min xxhash64(seed, shingle).
-    ~10× cheaper than md5; use for production LSH banding."""
-    sh = shingles(text, shingle_n)
-
-    def keyed_xxhash(seed: int):
-        return lambda s: F.xxhash64(F.lit(seed), s)
-
-    return F.array(
-        *[F.array_min(F.transform(sh, keyed_xxhash(i))) for i in range(n_hashes)]
-    )
-
-
 def lsh_bands(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -273,117 +273,6 @@ def node_overlap(
     return scored.orderBy(F.desc("jaccard"), "a", "b").limit(top_k)
 
 
-def node_overlap_banded(
-    memberships: DataFrame,
-    node: str = "node",
-    item: str = "item",
-    max_item_df: int = 50,
-    top_k: int = 25,
-    round_digits: int | None = 6,
-    n_hashes: int = 8,
-    bands: int = 8,
-) -> DataFrame:
-    """MinHash/LSH-banded strategy for :func:`node_overlap` — the
-    documented crossover for corpora where the inverted index's Σdf²
-    pair fill-in outgrows the candidate budget (SCALING.md's
-    q_supplier_overlap row: the most expensive absolute sf1 cell).
-
-    Same contract as ``node_overlap`` (same df-cap, same jaccard
-    definition against UNPRUNED sizes, same deterministic
-    (jaccard desc, a, b) top-k), different candidate generator:
-
-    - per-node minhash signature over the SAME df-capped postings the
-      exact path expands — min over items of xxhash64(seed, item) per
-      slot; algebraic, map-side combined, ONE row per node on the
-      shuffle instead of Σdf² pair rows;
-    - nodes sharing any band key become candidates (band = hash of
-      ``n_hashes // bands`` consecutive slots; recall follows the
-      banding S-curve 1-(1-s^r)^b — bands=8, r=1 gives
-      1-(1-s)^8 ≥ 0.996 at s ≥ 0.5);
-    - every candidate is EXACTLY verified (common-item count via a
-      candidate-restricted postings join, jaccard vs unpruned sizes),
-      so reported similarities are exact and ≥-threshold sound — the
-      near_dup_pipeline discipline applied to the graph family.
-
-    Pair work is |candidates|·avg-postings instead of Σdf²; at 100 TB
-    the band join shuffles short (band, h) keys, never postings.
-    """
-    # bands must tile the signature exactly: bands > n_hashes would give
-    # rows_per_band == 0 (a zero-arg xxhash64 -> runtime error) and a
-    # non-dividing bands would silently drop the remainder hash slots,
-    # lowering recall below the documented S-curve.
-    if bands < 1 or n_hashes % bands != 0:
-        raise ValueError(
-            f"bands must be >= 1 and divide n_hashes exactly; "
-            f"got n_hashes={n_hashes}, bands={bands}"
-        )
-    rows_per_band = n_hashes // bands
-    m = memberships.select(
-        F.col(node).alias("a"), F.col(item).alias("i")
-    ).distinct()
-    sizes = m.groupBy("a").agg(F.count(F.lit(1)).alias("n_items"))
-    df_ok = (
-        m.groupBy("i")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_item_df)
-        .select("i")
-    )
-    pruned = m.join(df_ok, "i")
-    sig = pruned.groupBy("a").agg(
-        *[
-            F.min(F.xxhash64(F.lit(k), F.col("i").cast("string"))).alias(f"h{k}")
-            for k in range(n_hashes)
-        ]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("h"),
-        )
-        for b in range(bands)
-    ]
-    bk = sig.select("a", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "a", "bk.band", "bk.h"
-    )
-    cands = (
-        bk.join(
-            bk.select(F.col("a").alias("b"), "band", "h"), ["band", "h"]
-        )
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    la = pruned.select("a", "i")
-    lb = pruned.select(F.col("a").alias("b"), F.col("i"))
-    pairs = (
-        cands.join(la, "a")
-        .join(lb, ["b", "i"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("a"), F.col("n_items").alias("na"))
-    sb = sizes.select(F.col("a").alias("b"), F.col("n_items").alias("nb"))
-    scored = (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            "common",
-            "na",
-            "nb",
-            _maybe_round(
-                F.col("common")
-                / (F.col("na") + F.col("nb") - F.col("common")).cast("double"),
-                round_digits,
-            ).alias("jaccard"),
-        )
-    )
-    return scored.orderBy(F.desc("jaccard"), "a", "b").limit(top_k)
-
-
 def _maybe_round(col: Column, digits: int | None) -> Column:
     if digits is None:
         return col

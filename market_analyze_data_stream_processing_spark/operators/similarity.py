@@ -13,6 +13,7 @@ Two paths, same semantics:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 import numpy as np
@@ -20,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.vectors import as_double, cosine_sim, lit_vector
 
 
@@ -75,12 +77,6 @@ def with_lsh_bucket(
         )
         bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
     return df.withColumn(out_col, bucket)
-
-
-#: Build-once seed-cell index cache (same lifecycle contract as
-#: :data:`_IVF_INDEX_CACHE`): repeated ``seed_cell_column`` executions
-#: under one key skip the count/collect pre-pass entirely.
-_SEED_CELL_CACHE: dict[object, dict] = {}
 
 
 def _observed_count_is_exact(top: DataFrame, n_seen: int, limit: int) -> bool:
@@ -187,13 +183,11 @@ def save_seed_cell_index(index: dict, spark, path: str) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def load_seed_cell_index(spark, path: str, cache_key: object | None = None) -> dict:
+def load_seed_cell_index(spark, path: str) -> dict:
     """Load a stored seed-cell index (inverse of
     :func:`save_seed_cell_index`)."""
-    if cache_key is not None and cache_key in _SEED_CELL_CACHE:
-        return _SEED_CELL_CACHE[cache_key]
     rows = spark.read.parquet(path).collect()
-    index = {
+    return {
         "k": int(rows[0]["k"]),
         "target_block": int(rows[0]["target_block"]),
         "max_cells": int(rows[0]["max_cells"]),
@@ -203,9 +197,6 @@ def load_seed_cell_index(spark, path: str, cache_key: object | None = None) -> d
             if r["seed_id"] is not None
         ),
     }
-    if cache_key is not None:
-        _SEED_CELL_CACHE[cache_key] = index
-    return index
 
 
 def seed_cell_column(
@@ -254,7 +245,10 @@ def seed_cell_column(
     table).  Fresh builds themselves no longer full-scan: K derives
     from a bounded incremental ``take`` that is provably identical to
     the exact-count formula (see :func:`build_seed_cell_index`).
-    ``invalidate_ivf_index`` clears this cache too.
+    The reuse goes through ``cache`` kind ``seed_cells``, which
+    ``invalidate_ivf_index`` clears; a caller whose corpus can be
+    rewritten folds its version (e.g. a ``cache.file_token``) into
+    ``cache_key``.
 
     Returns ``(df_with_out_col, n_cells)``.
     """
@@ -267,16 +261,14 @@ def seed_cell_column(
     # quadratic work up by the depth ratio squared). An EXPLICIT
     # ``index`` argument governs regardless of the params — it IS the
     # quantizer (the stored-artifact contract).
-    qualified = (cache_key, target_block, max_cells) if cache_key is not None else None
-    if index is None and qualified is not None:
-        index = _SEED_CELL_CACHE.get(qualified)
     if index is None:
-        index = build_seed_cell_index(
-            df, id_col=id_col, vec_col=vec_col,
+        build = functools.partial(
+            build_seed_cell_index, df, id_col=id_col, vec_col=vec_col,
             target_block=target_block, max_cells=max_cells,
         )
-        if qualified is not None:
-            _SEED_CELL_CACHE[qualified] = index
+        index = build() if cache_key is None else cache.get(
+            "seed_cells", (cache_key, target_block, max_cells), build
+        )
     k = index["k"]
     seeds = index["seeds"]
     seeds_by_len: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
@@ -332,37 +324,14 @@ def seed_cell_column(
     return df.withColumn(out_col, cell_of(F.col(vec_col))), k
 
 
-#: Build-once IVF centroid cache. A production IVF index is built ONCE
-#: (or incrementally) and reused by every query; recomputing the full
-#: posexplode aggregate per query made q_ann_ivf ~5× slower than the
-#: exact scan it is supposed to beat.
-_IVF_INDEX_CACHE: dict[object, dict[int, "np.ndarray"]] = {}
-
-
-def invalidate_ivf_index(cache_key: object | None = None) -> None:
-    """Drop cached IVF centroids AND seed-cell indexes (one key, or
-    everything when ``None``) — the bench's per-query "full end-to-end
-    execution" reset clears both build-once caches through this single
-    entry point.
-
-    The caches have no automatic invalidation: callers that rebuild or
-    mutate a corpus within a session must either call this or fold a
-    table version (e.g. source-file mtime) into ``cache_key`` so a
-    changed corpus maps to a fresh entry."""
-    if cache_key is None:
-        _IVF_INDEX_CACHE.clear()
-        _SEED_CELL_CACHE.clear()
-    else:
-        _IVF_INDEX_CACHE.pop(cache_key, None)
-        # seed-cell entries are namespaced (cache_key, target, max):
-        # drop every parameterization of the caller's key
-        _SEED_CELL_CACHE.pop(cache_key, None)
-        for k in [
-            k
-            for k in _SEED_CELL_CACHE
-            if isinstance(k, tuple) and len(k) == 3 and k[0] == cache_key
-        ]:
-            _SEED_CELL_CACHE.pop(k, None)
+def invalidate_ivf_index() -> None:
+    """Drop every cached IVF centroid set and seed-cell index (``cache``
+    kinds ``ivf`` and ``seed_cells``), so the next ANN query rebuilds its
+    index end to end. Benchmarks call this after every query; see the
+    ``cache`` module for why the expression, probe and plan kinds are
+    kept. A caller that rewrites a corpus in place can call this, or
+    fold a table version into its ``cache_key``."""
+    cache.clear("ivf", "seed_cells")
 
 
 def ivf_index(
@@ -380,49 +349,43 @@ def ivf_index(
     the built index across queries in the same session, the way a stored
     index would be at 100 TB.
     """
-    if cache_key is not None and cache_key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[cache_key]
+    build = functools.partial(_ivf_centroids, df, vec_col, cluster_col, dim)
+    centroids = build() if cache_key is None else cache.get("ivf", cache_key, build)
+    return centroids or {}
+
+
+def _ivf_centroids(df, vec_col, cluster_col, dim) -> dict[int, np.ndarray] | None:
+    """The uncached :func:`ivf_index` build; ``None`` for an empty corpus.
+    An empty index is never cached: caching it would pin empty ANN
+    results after the table is populated under the same key."""
     if dim is None:
         row = df.select(F.size(vec_col)).first()
         if row is None:
-            return {}  # empty corpus → empty index (not cached)
+            return None
         dim = row[0]
     # Per-slot avg aggregates instead of posexplode: no |rows|·dim row
     # explosion, map-side combined, one row per cluster per partition on
     # the shuffle — the cheapest possible full-corpus centroid pass.
-    # The dim-wide expression list is memoized per process (round 15,
-    # the operators/stats.py _KERNEL_MEMO discipline): building it costs
-    # ~5 Py4J roundtrips per slot (~0.4 s at dim=64, measured by
-    # cProfile as the single largest build item of a fresh q_ann_ivf
-    # execution), and the list is a pure function of the column names
-    # and dim. Gateway id in the key — restart safety, see stats.py.
-    from .stats import _KERNEL_MEMO, _gateway_id
-
-    mkey = ("ivf_aggs", _gateway_id(), vec_col, cluster_col, dim)
-    exprs = _KERNEL_MEMO.get(mkey)
-    if exprs is None:
-        exprs = _KERNEL_MEMO[mkey] = (
-            F.col(cluster_col).alias("c"),
-            [
-                F.avg(F.element_at(F.col(vec_col), i + 1)).alias(f"m{i}")
-                for i in range(dim)
-            ],
-        )
-    cents = df.groupBy(exprs[0]).agg(*exprs[1]).collect()
+    # The dim-wide expression list is memoized per process (``cache``
+    # kind ``kernel``): building it costs ~5 Py4J roundtrips per slot
+    # (~0.4 s at dim=64, measured by cProfile as the single largest
+    # build item of a fresh q_ann_ivf execution), and the list is a pure
+    # function of the column names and dim.
+    group, aggs = cache.get("kernel", ("ivf_aggs", vec_col, cluster_col, dim), lambda: (
+        F.col(cluster_col).alias("c"),
+        [
+            F.avg(F.element_at(F.col(vec_col), i + 1)).alias(f"m{i}")
+            for i in range(dim)
+        ],
+    ))
+    cents = df.groupBy(group).agg(*aggs).collect()
     # positional slice, not per-field name lookup: cProfile (round 15)
     # put 0.4 s of every fresh q_ann_ivf build in the by-name Row access
     # loop (dim × k string-keyed getitems); the agg's output order is
     # (c, m0..m{dim-1}) by construction.
-    centroids = {
+    return {
         int(r[0]): np.asarray(r[1:], dtype=np.float64) for r in cents
-    }
-    if cache_key is not None and centroids:
-        # An EMPTY index is never cached (mirrors the dim-probe early
-        # return): caching {} for an empty-at-the-time corpus would pin
-        # permanently-empty ANN results after the table is populated
-        # under the same key.
-        _IVF_INDEX_CACHE[cache_key] = centroids
-    return centroids
+    } or None
 
 
 def save_ivf_index(centroids: dict[int, np.ndarray], spark, path: str) -> None:
@@ -435,17 +398,12 @@ def save_ivf_index(centroids: dict[int, np.ndarray], spark, path: str) -> None:
     ).parquet(path)
 
 
-def load_ivf_index(spark, path: str, cache_key: object | None = None) -> dict[int, np.ndarray]:
+def load_ivf_index(spark, path: str) -> dict[int, np.ndarray]:
     """Load a stored IVF index (inverse of :func:`save_ivf_index`)."""
-    if cache_key is not None and cache_key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[cache_key]
-    centroids = {
+    return {
         int(r["cell"]): np.asarray(r["vec"], dtype=np.float64)
         for r in spark.read.parquet(path).collect()
     }
-    if cache_key is not None:
-        _IVF_INDEX_CACHE[cache_key] = centroids
-    return centroids
 
 
 def ann_ivf(
@@ -743,39 +701,22 @@ def ann_ivf_stored(
     the scan's PartitionFilters — only the ``n_probe`` probed cell
     directories are read. Results are identical to ``ann_ivf`` with the
     same centroids: both sides assign cells through ``with_ivf_cell``.
-    The index is cached per (path, version), so a serving loop pays the
-    parquet read + collect once, not per probe — and a rebuilt layout
-    maps to a fresh entry while the superseded entry for the same path
-    is evicted on insert (a rebuild-every-N-minutes loop must not leak
-    one centroid dict per rebuild for the session lifetime).
+    The index is cached per path (``cache`` kind ``ivf``) with the
+    layout's version as its token, so a serving loop pays the parquet
+    read + collect once, not per probe, and a rebuilt layout replaces
+    the superseded entry for that path.
 
     ``index_version``: the layout's version stamp. Pass one explicitly
     wherever the writer can supply it (a build id, a snapshot/commit id,
     a manifest timestamp) — REQUIRED on object stores, where the driver
-    has no local mtime to read. Default ``None`` falls back to
-    ``os.path.getmtime`` of the index directory, which only works for
-    driver-visible local paths and has filesystem-dependent granularity
-    (a same-second rebuild can collide; explicit versions cannot)."""
-    import os
-
-    version = (
-        index_version
-        if index_version is not None
-        else os.path.getmtime(f"{path}/index")
+    has no local mtime to read. Default ``None`` falls back to the
+    ``(mtime_ns, size)`` of the index directory, which only works for
+    driver-visible local paths."""
+    index = f"{path}/index"
+    version = index_version if index_version is not None else cache.file_token(index)
+    centroids = cache.get(
+        "ivf", ("ivf-stored", path), lambda: load_ivf_index(spark, index), version
     )
-    key = ("ivf-stored", path, version)
-    if key not in _IVF_INDEX_CACHE:
-        # Evict superseded versions of THIS path before inserting the
-        # fresh one (other paths' entries are untouched).
-        for stale in [
-            k2
-            for k2 in _IVF_INDEX_CACHE
-            if isinstance(k2, tuple)
-            and len(k2) == 3
-            and k2[:2] == ("ivf-stored", path)
-        ]:
-            _IVF_INDEX_CACHE.pop(stale, None)
-    centroids = load_ivf_index(spark, f"{path}/index", cache_key=key)
     probe = _nearest_cells(centroids, query_vec, n_probe)
     stored = spark.read.parquet(f"{path}/data").where(F.col("cell").isin(probe))
     return knn_exact(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.scalars import domain_checked, numeric_assert_enabled
 
 #: default input grid: 1e-12 quantization. DOMAIN BOUND: cross-engine
@@ -118,32 +119,17 @@ def corr_moment_aggs(
     ]
 
 
-# Session-lifetime memo for the moment-kernel EXPRESSION LISTS
-# (round-14, guide §1.2 per-task→per-build analogue): one
-# corr_moment_aggs call costs ~90 Py4J roundtrips of pure expression
-# construction, and the corr family (q_autocorr, q_ljung_box,
-# q_risk_report, q_lead_lag, q_stats_agg, ...) rebuilds the identical
-# unresolved trees on every plan build. Unresolved Columns are
-# immutable, input-independent descriptors — the same objects are
-# valid in any number of plans — so builders keyed purely by STRINGS
-# (column names / prefixes / grids) memoize them per process. The
-# assert flag participates in the key because domain_checked bakes it
-# into the tree at construction. Expressions only — never plans tied
-# to a DataFrame, never data. The GATEWAY IDENTITY participates in
-# every key (round-15): an unresolved Column still holds a Py4J
-# JavaObject, so if the SparkContext/JVM gateway is stopped and
-# restarted in the same Python process, cached trees would hold dead
-# Java references and every corr-family build would fail with opaque
-# Py4J errors. applicationId is unique per context (object ids can be
-# reused; applicationIds are not) — the same restart-safety contract
-# as the load_table plan cache.
-_KERNEL_MEMO: dict[tuple, object] = {}
-
-# shared helper (functions/scalars.py); kept under the old name because
-# volatility.py / similarity.py import it from here
-from ..functions.scalars import gateway_id as _gateway_id  # noqa: E402
-
-
+# The moment-kernel EXPRESSION LISTS are memoized per process (``cache``
+# kind ``kernel``, shared with volatility.return_autocorr and
+# similarity.ivf_index): one corr_moment_aggs call costs ~90 Py4J round
+# trips of pure expression construction, and the corr family
+# (q_autocorr, q_ljung_box, q_risk_report, q_lead_lag, q_stats_agg, ...)
+# rebuilds the identical unresolved trees on every plan build.
+# Unresolved Columns are immutable, input-independent descriptors, valid
+# in any number of plans, so builders keyed purely by STRINGS (column
+# names, prefixes, grids) can share them. The assert flag is part of the
+# key because domain_checked bakes it into the tree at construction.
+# Expressions only: never plans tied to a DataFrame, never data.
 def corr_moment_aggs_named(
     x_name: str,
     y_name: str,
@@ -154,26 +140,18 @@ def corr_moment_aggs_named(
     """Name-keyed, memoized :func:`corr_moment_aggs` — identical
     expression trees, built once per process per argument tuple."""
     key = (
-        "aggs", _gateway_id(), x_name, y_name, prefix, prod_grid,
-        prod_digits, numeric_assert_enabled(),
+        "aggs", x_name, y_name, prefix, prod_grid, prod_digits,
+        numeric_assert_enabled(),
     )
-    hit = _KERNEL_MEMO.get(key)
-    if hit is None:
-        hit = corr_moment_aggs(
-            F.col(x_name), F.col(y_name), prefix, prod_grid, prod_digits
-        )
-        _KERNEL_MEMO[key] = hit
-    return hit
+    return cache.get("kernel", key, lambda: corr_moment_aggs(
+        F.col(x_name), F.col(y_name), prefix, prod_grid, prod_digits
+    ))
 
 
 def corr_from_moments_named(prefix: str) -> Column:
     """Memoized :func:`corr_from_moments` (pure function of the
     prefix; no domain checks in this tree)."""
-    key = ("corr", _gateway_id(), prefix)
-    hit = _KERNEL_MEMO.get(key)
-    if hit is None:
-        hit = _KERNEL_MEMO[key] = corr_from_moments(prefix)
-    return hit
+    return cache.get("kernel", ("corr", prefix), lambda: corr_from_moments(prefix))
 
 
 def corr_from_moments(prefix: str) -> Column:

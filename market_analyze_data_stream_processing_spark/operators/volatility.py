@@ -95,26 +95,15 @@ def return_autocorr(
     on every engine. Pairs where either side is null (series head,
     zero-close gaps) drop out of that lag's correlation only.
     """
+    from .. import cache
     from ..functions.scalars import numeric_assert_enabled
-    from .stats import (
-        _KERNEL_MEMO,
-        _gateway_id,
-        corr_from_moments_named,
-        corr_moment_aggs_named,
-        quantize,
-    )
+    from .stats import corr_from_moments_named, corr_moment_aggs_named, quantize
 
-    # Expression-set memo (round-14): every tree below is a pure
-    # function of (lags, key, day, close) column NAMES — build it once
-    # per process per argument tuple; only the four DataFrame calls
-    # (withColumn/withColumns/agg/select) run per plan build. Gateway
-    # id in the key (round-15): see _KERNEL_MEMO in operators/stats.py.
-    mkey = (
-        "return_autocorr", _gateway_id(), tuple(lags), key, day, close,
-        numeric_assert_enabled(),
-    )
-    exprs = _KERNEL_MEMO.get(mkey)
-    if exprs is None:
+    # Expression-set memo (``cache`` kind ``kernel``): every tree below
+    # is a pure function of (lags, key, day, close) column NAMES, so it
+    # is built once per process per argument tuple; only the four
+    # DataFrame calls (withColumn/withColumns/agg/select) run per build.
+    def build():
         base = Window.partitionBy(key).orderBy(day)
         prev = F.lag(close).over(base)
         r = F.when(
@@ -133,8 +122,10 @@ def return_autocorr(
         out_cols = [
             corr_from_moments_named(f"l{k}").alias(f"acf_{k}") for k in lags
         ]
-        exprs = _KERNEL_MEMO[mkey] = (r, lag_cols, agg_cols, out_cols)
-    r, lag_cols, agg_cols, out_cols = exprs
+        return r, lag_cols, agg_cols, out_cols
+
+    mkey = ("return_autocorr", tuple(lags), key, day, close, numeric_assert_enabled())
+    r, lag_cols, agg_cols, out_cols = cache.get("kernel", mkey, build)
     with_r = daily.withColumn("__r", r)
     # the moments are aggregates, not window fns: materialize the
     # lagged columns first, then aggregate — one window pass + one agg.

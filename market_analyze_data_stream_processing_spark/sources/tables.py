@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import cache
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -27,58 +29,26 @@ TABLE_NAMES = (
 )
 
 
-# Session-scoped logical-PLAN cache (round-14): ``spark.read.parquet``
-# costs ~0.25 s per call on this host — footer/schema inference plus a
-# fresh InMemoryFileIndex listing — and the suite calls load_table
-# hundreds of times per bench pass. The cached object is a lazy
-# DataFrame (an unexecuted scan plan): every execution still reads the
-# parquet input in full, so this caches METADATA the way a catalog
-# table's metastore schema would at production scale (guide §6 — file
-# listing/planning cost), never data or results. Keyed by
-# applicationId so a restarted SparkContext can never serve a stale
-# JVM handle (object ids can be reused; applicationIds are unique),
-# and GUARDED by a staleness token (mtime_ns + size of the table
-# path): a test/operator that overwrites a parquet path and re-queries
-# must get a fresh file index, not a scan plan listing deleted files —
-# the metastore analogue is REFRESH TABLE after an external rewrite.
-_DF_CACHE: dict[tuple[str, str, str], tuple[tuple | None, DataFrame]] = {}
-
-
-def _path_token(path: str) -> tuple | None:
-    """Cheap change-detector for a parquet file or directory: Spark's
-    overwrite recreates the file/dir, so (mtime_ns, size) moves on every
-    rewrite. None = path absent (the read will raise its own error). An
-    in-place byte edit that preserves mtime and size is invisible — the
-    same contract as a metastore's cached file index."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_mtime_ns, st.st_size)
-
-
-def _sf_token(sf_dir: str) -> tuple:
-    """Staleness token for every table under ``sf_dir`` (10 stat calls,
-    ~µs) — used by plan_memo, whose builders may read several tables."""
-    return tuple(
-        _path_token(f"{sf_dir}/{n}.parquet") for n in TABLE_NAMES
-    )
-
-
+# Scan plans are cached per session (``cache`` kind ``table``):
+# ``spark.read.parquet`` costs ~0.25 s per call (footer and schema
+# inference plus a fresh InMemoryFileIndex listing), and the suite calls
+# load_table hundreds of times per bench pass. The cached object is a
+# lazy DataFrame, an unexecuted scan plan: every execution still reads
+# the parquet input in full, so this caches METADATA the way a catalog's
+# metastore schema would, never data or results. The file token makes a
+# rewritten table path load a fresh file index (the metastore analogue
+# is REFRESH TABLE after an external rewrite).
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; one of {TABLE_NAMES}")
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
-    token = _path_token(f"{sf_dir}/{name}.parquet")
-    hit = _DF_CACHE.get(key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    if name == "events":
-        df = _load_events_uncached(spark, sf_dir)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _DF_CACHE[key] = (token, df)
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+
+    def build() -> DataFrame:
+        if name == "events":
+            return _load_events_uncached(spark, sf_dir)
+        return spark.read.parquet(path)
+
+    return cache.get("table", (sf_dir.rstrip("/"), name), build, cache.file_token(path))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,41 +98,24 @@ def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def plan_memo(fn):
     """Memoize a DataFrame-PLAN builder ``fn(spark, sf_dir, ...)`` per
-    session (round-14). Same contract as the load_table cache above: the
-    cached object is an unexecuted logical plan, so every execution
-    still computes from the parquet inputs — this removes only the
-    repeated Py4J/analysis cost of rebuilding an identical plan prefix
-    (~40-150 ms per builder call) that dozens of queries share. Keyed by
-    applicationId (restart-safe) + sf_dir + extra args, and guarded by
-    the sf_dir staleness token (builders may read several tables, so the
-    token covers all of them): rewriting any input invalidates the
-    memoized plan, same contract as load_table's cache."""
+    session (``cache`` kind ``plan``). As with load_table, the cached
+    object is an unexecuted logical plan, so every execution still
+    computes from the parquet inputs; this removes only the repeated
+    Py4J and analysis cost of rebuilding a plan prefix that dozens of
+    queries share (~40-150 ms per builder call). Builders may read
+    several tables, so the staleness token covers every table under
+    ``sf_dir``: rewriting any input invalidates the memoized plan."""
     import functools
-
-    cache: dict[tuple, tuple[tuple, DataFrame]] = {}
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str, *args, **kwargs):
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir.rstrip("/"),
-            args,
-            tuple(sorted(kwargs.items())),
+        key = (fn, sf_dir.rstrip("/"), args, tuple(sorted(kwargs.items())))
+        token = cache.file_token(*(f"{sf_dir}/{n}.parquet" for n in TABLE_NAMES))
+        return cache.get(
+            "plan", key, lambda: fn(spark, sf_dir, *args, **kwargs), token
         )
-        token = _sf_token(sf_dir)
-        hit = cache.get(key)
-        if hit is not None and hit[0] == token:
-            return hit[1]
-        df = fn(spark, sf_dir, *args, **kwargs)
-        cache[key] = (token, df)
-        return df
 
     return wrapper
-
-
-#: (path, mtime_ns, size) -> parquet row-group count. Footers are read
-#: once per file per process, not once per plan build.
-_ROW_GROUP_MEMO: dict[tuple[str, int, int], int] = {}
 
 
 def _scan_splits(df: DataFrame) -> int | None:
@@ -227,21 +180,27 @@ def _scan_splits(df: DataFrame) -> int | None:
             st = os.stat(p)
         except OSError:
             return None
-        key = (p, st.st_mtime_ns, st.st_size)
-        n_rg = _ROW_GROUP_MEMO.get(key)
+        # footers are read once per file version per process
+        n_rg = cache.get(
+            "row_groups", p, lambda: _row_groups(p), (st.st_mtime_ns, st.st_size)
+        )
         if n_rg is None:
-            try:
-                import pyarrow.parquet as pq
-
-                n_rg = pq.ParquetFile(p).metadata.num_row_groups
-            except Exception:
-                return None
-            _ROW_GROUP_MEMO[key] = n_rg
+            return None
         total_row_groups += n_rg
         total_bytes += st.st_size + open_cost
     max_split = min(max_pb, max(open_cost, total_bytes // max(1, min_pn)))
     byte_splits = max(1, -(-total_bytes // max(1, max_split)))  # ceil div
     return min(byte_splits, total_row_groups)
+
+
+def _row_groups(path: str) -> int | None:
+    """Row-group count from a parquet footer; None when unreadable."""
+    try:
+        import pyarrow.parquet as pq
+
+        return pq.ParquetFile(path).metadata.num_row_groups
+    except Exception:
+        return None
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

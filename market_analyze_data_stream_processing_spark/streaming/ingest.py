@@ -69,18 +69,6 @@ def kafka_topic_stream(
     )
 
 
-def write_kafka_stream(
-    wire: DataFrame, bootstrap: str, checkpoint_dir: str
-):
-    """S1 sink: start a kafka writeStream over a ``to_kafka_frame``-shaped
-    frame (key/value/topic string columns). Returns the StreamingQuery."""
-    return (
-        wire.writeStream.format("kafka")
-        .options(**kafka_sink_options(bootstrap, checkpoint_dir))
-        .start()
-    )
-
-
 def file_json_stream(spark: SparkSession, path: str, max_files: int = 10) -> DataFrame:
     """Fixture replay source: newline-JSON files with columns
     (topic, key, value) — the same shape the Kafka source yields, so the

@@ -106,9 +106,8 @@ def _ewma_step(
     e_t = (1-alpha)*e_{t-1} + alpha*x_t, seeded from state. Rows at or
     before the last processed seq are dropped (late-replay guard) and
     duplicate seqs inside the batch are collapsed to their first copy,
-    so replays emit identical values exactly once. Pure pandas — shared
-    by the applyInPandasWithState and transformWithStateInPandas forms
-    so both engines run the identical recursion. Returns the output
+    so replays emit identical values exactly once. Pure pandas, so the
+    recursion can be unit-tested without a stream. Returns the output
     frame (its last row is the new state) or None when nothing advanced."""
     if not parts:
         return None
@@ -211,155 +210,6 @@ def latest_per_key_stateful(
     )
 
 
-# --- transformWithStateInPandas (Spark 4 successor API) ---------------
-#
-# applyInPandasWithState is superseded in Spark 4 by the StatefulProcessor
-# API (SPARK-49564): typed named state (value/list/map), TTL at the state
-# level instead of per-key timeouts, and timers. The operators below are
-# the same two stateful computations expressed against the new API —
-# batch semantics are SHARED with the legacy forms (_ewma_step), so the
-# two engines cannot drift. Guarded: ``HAS_TRANSFORM_WITH_STATE`` is
-# False on runtimes without the API OR without protobuf — the TWS
-# state-server protocol (StateMessage_pb2) imports google.protobuf at
-# query start, so a runtime missing it crashes the driver worker even
-# though the DataFrame API is importable. Callers fall back to the
-# applyInPandasWithState forms. De-risks the legacy API's eventual
-# deprecation at scale.
-
-try:  # pragma: no cover - import guard exercised by the test module
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    import google.protobuf.descriptor  # noqa: F401  (TWS wire protocol)
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # Spark < 4.0, or protobuf not installed
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment,misc]
-    HAS_TRANSFORM_WITH_STATE = False
-
-#: transformWithState requires the RocksDB state store provider; set this
-#: on the session before starting a query that uses the TWS operators.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-class _EwmaProcessor(StatefulProcessor):
-    """Recursive EWMA as a StatefulProcessor: one named value state per
-    key holding the (seq, ewma) pair; handleInputRows replays the shared
-    _ewma_step recursion."""
-
-    def __init__(self, alpha: float):
-        self._alpha = alpha
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("ewma", EWMA_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        last_seq, last = self._state.get() if self._state.exists() else (-1, None)
-        out = _ewma_step(
-            self._alpha, key[0], last_seq, last, [p for p in rows if not p.empty]
-        )
-        if out is None:
-            return
-        self._state.update((int(out["seq"].iloc[-1]), float(out["ewma"].iloc[-1])))
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-class _LatestProcessor(StatefulProcessor):
-    """Latest-row-per-key as a StatefulProcessor. TTL is declared on the
-    state itself (getValueState(ttlDurationMs=...)) — the state store
-    expires idle keys without per-key timeout bookkeeping, the TWS
-    replacement for ProcessingTimeTimeout."""
-
-    def __init__(self, ttl_ms: int | None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "latest", LATEST_STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        best_seq, best_value, best_payload = (
-            self._state.get() if self._state.exists() else (-1, None, None)
-        )
-        changed = False
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            row = pdf.loc[pdf["seq"].idxmax()]
-            if int(row["seq"]) > best_seq:
-                best_seq = int(row["seq"])
-                best_value = float(row["value"])
-                best_payload = str(row["payload"])
-                changed = True
-        if not changed and self._state.exists():
-            # TTL parity with the legacy applyInPandasWithState form,
-            # which calls setTimeoutDuration on EVERY invocation: any
-            # activity — even all-stale (seq <= best_seq) rows — keeps
-            # the key alive. TWS value-state TTL refreshes on write, so
-            # re-writing the unchanged best row is the refresh.
-            self._state.update((best_seq, best_value, best_payload))
-        if changed:
-            self._state.update((best_seq, best_value, best_payload))
-            yield pd.DataFrame(
-                [
-                    {
-                        "key": key[0],
-                        "seq": best_seq,
-                        "value": best_value,
-                        "payload": best_payload,
-                    }
-                ]
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def ewma_per_key_tws(
-    stream: DataFrame, alpha: float = 0.1, key_col: str = "key"
-) -> DataFrame:
-    """``ewma_per_key_stateful`` on the Spark 4 StatefulProcessor API.
-    Identical semantics (shared _ewma_step); requires
-    HAS_TRANSFORM_WITH_STATE and the RocksDB state store provider."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithStateInPandas needs Spark >= 4.0; "
-            "use ewma_per_key_stateful"
-        )
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        _EwmaProcessor(alpha),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-def latest_per_key_tws(
-    stream: DataFrame, key_col: str = "key", ttl_ms: int | None = None
-) -> DataFrame:
-    """``latest_per_key_stateful`` on the Spark 4 StatefulProcessor API,
-    with state-level TTL replacing per-key processing-time timeouts."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithStateInPandas needs Spark >= 4.0; "
-            "use latest_per_key_stateful"
-        )
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        _LatestProcessor(ttl_ms),
-        outputStructType=LATEST_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="processingTime" if ttl_ms is not None else "none",
-    )
-
-
 RSI_STATE_SCHEMA = StructType(
     [
         StructField("seq", LongType()),
@@ -398,8 +248,7 @@ def _rsi_step(
     During warmup (``nd < n``) the ``g``/``l`` state fields hold SUMS of
     gains/losses; at the nth delta they become Wilder averages. Same
     late-replay and in-batch-duplicate guards as ``_ewma_step`` (shared
-    replay semantics; pure pandas/python so the applyInPandasWithState
-    and any future TWS form run the identical recursion). RSI is null
+    replay semantics; pure pandas/python). RSI is null
     until n deltas exist; zero-denominator conventions are the batch
     form's: all-loss ⇒ 0, all-gain ⇒ 100, flat ⇒ 50.
 

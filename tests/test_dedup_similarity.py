@@ -174,12 +174,12 @@ def test_ann_ivf_stored_layout_prunes_partitions(spark, vectors, tmp_path):
 
 def test_ann_ivf_stored_version_cache_evicts_superseded(spark, vectors, tmp_path):
     """A serving loop that periodically rebuilds the layout must not
-    accumulate one centroid dict per rebuild: inserting a new version's
-    cache entry evicts the superseded entry for the same path, while
-    entries for other paths are untouched. Explicit index_version also
-    bypasses the local-FS mtime fallback (the object-store case)."""
+    accumulate one centroid dict per rebuild: a new version's entry
+    replaces the superseded entry for the same path, while entries for
+    other paths are untouched. Explicit index_version also bypasses the
+    local-FS mtime fallback (the object-store case)."""
+    from market_analyze_data_stream_processing_spark import cache
     from market_analyze_data_stream_processing_spark.operators.similarity import (
-        _IVF_INDEX_CACHE,
         ann_ivf_stored,
         write_ivf_layout,
     )
@@ -193,12 +193,10 @@ def test_ann_ivf_stored_version_cache_evicts_superseded(spark, vectors, tmp_path
     ann_ivf_stored(spark, other, q, k=2, index_version="other-v1").collect()
     for v in ("v1", "v2", "v3"):
         ann_ivf_stored(spark, path, q, k=2, index_version=v).collect()
-    mine = [
-        k for k in _IVF_INDEX_CACHE
-        if isinstance(k, tuple) and k[:2] == ("ivf-stored", path)
-    ]
-    assert mine == [("ivf-stored", path, "v3")]
-    assert ("ivf-stored", other, "other-v1") in _IVF_INDEX_CACHE
+    # one entry per path (the version is its token), holding the newest
+    ivf = cache.tokens("ivf")
+    assert ivf[("ivf-stored", path)] == "v3"
+    assert ivf[("ivf-stored", other)] == "other-v1"
 
 
 def test_ann_ivf_stored_rebuild_serves_fresh_centroids(spark, vectors, tmp_path):
@@ -208,8 +206,8 @@ def test_ann_ivf_stored_rebuild_serves_fresh_centroids(spark, vectors, tmp_path)
     ids and the stale cache entry is gone. (With a reused version stamp
     the cache would — by design — still serve the old centroids; the
     version bump is the contract.)"""
+    from market_analyze_data_stream_processing_spark import cache
     from market_analyze_data_stream_processing_spark.operators.similarity import (
-        _IVF_INDEX_CACHE,
         ann_ivf_stored,
         write_ivf_layout,
     )
@@ -228,8 +226,8 @@ def test_ann_ivf_stored_rebuild_serves_fresh_centroids(spark, vectors, tmp_path)
     second = {r["vec_id"] for r in
               ann_ivf_stored(spark, path, q, k=3, index_version=2).collect()}
     assert second and all(v >= 10_000 for v in second)
-    assert ("ivf-stored", path, 1) not in _IVF_INDEX_CACHE
-    assert ("ivf-stored", path, 2) in _IVF_INDEX_CACHE
+    # the stale version's entry is gone: the path's one entry is v2
+    assert cache.tokens("ivf")[("ivf-stored", path)] == 2
 
 
 def test_simhash_fingerprints_match_expression_form(docs):
@@ -1086,7 +1084,7 @@ def test_seed_cell_index_reuse_skips_prepass_jobs(spark):
         "vec_id long, embedding array<double>",
     )
     key = ("seed-cells-test", id(df))
-    invalidate_ivf_index(key)
+    invalidate_ivf_index()
     floor0 = max_stage_id(spark)
     fresh, k1 = seed_cell_column(df, target_block=8, max_cells=4, cache_key=key)
     floor1 = max_stage_id(spark)
@@ -1107,11 +1105,49 @@ def test_seed_cell_index_reuse_skips_prepass_jobs(spark):
     c = {r["vec_id"]: r["__cell"] for r in prebuilt.collect()}
     assert a == b == c
     # invalidation forces a real rebuild
-    invalidate_ivf_index(key)
+    invalidate_ivf_index()
     floor3 = max_stage_id(spark)
     seed_cell_column(df, target_block=8, max_cells=4, cache_key=key)
     assert max_stage_id(spark) > floor3
-    invalidate_ivf_index(key)
+    invalidate_ivf_index()
+
+
+def test_embedding_near_dup_rebuilds_quantizer_after_corpus_rewrite(spark, tmp_path):
+    """q_embedding_near_dup caches its seed-cell quantizer per corpus
+    version: after ``embeddings.parquet`` is rewritten in the same
+    session, the query must answer exactly as a run whose cached indexes
+    were dropped first, never from the old corpus's seeds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from market_analyze_data_stream_processing_spark.operators.similarity import (
+        invalidate_ivf_index,
+    )
+    from market_analyze_data_stream_processing_spark.plans import QUERIES
+
+    def write_corpus(seed):
+        # 600 rows: K = ceil(600/256) = 3 seed cells, so the seeds (the
+        # first three ids' vectors) decide which pairs are compared
+        rng = np.random.default_rng(seed)
+        pq.write_table(pa.table({
+            "vec_id": pa.array(range(600), pa.int64()),
+            "embedding": pa.array(
+                rng.normal(size=(600, 8)).astype(np.float32).tolist(),
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array(rng.integers(0, 2, 600), pa.int32()),
+        }), tmp_path / "embeddings.parquet")
+
+    def run():
+        return QUERIES["q_embedding_near_dup"].fn(spark, str(tmp_path)).collect()
+
+    write_corpus(1)
+    first = run()
+    write_corpus(2)
+    rewritten = run()
+    invalidate_ivf_index()
+    assert rewritten == run()
+    assert rewritten != first
 
 
 def test_seed_cell_index_build_is_one_job(spark):

@@ -4,8 +4,6 @@ corpus graph)."""
 
 from __future__ import annotations
 
-import pytest
-
 from market_analyze_data_stream_processing_spark.operators.graph import pagerank
 
 
@@ -138,149 +136,3 @@ def test_node_overlap_pair_growth_bound_sf01(spark):
     out = node_overlap(m, max_item_df=cap, top_k=25).collect()
     assert len(out) == 25
     assert all(r["a"] < r["b"] and r["common"] >= 1 for r in out)
-
-
-def test_node_overlap_banded_small_exact_parity(spark):
-    """node_overlap_banded's verification stage is EXACT: on a corpus
-    small enough that banding recalls everything of interest, its
-    reported (common, na, nb, jaccard) rows must be value-identical to
-    node_overlap's for the pairs both emit — the banded path changes
-    the candidate GENERATOR, never the scoring."""
-    from pyspark.sql import functions as F
-
-    from market_analyze_data_stream_processing_spark.operators.graph import (
-        node_overlap,
-        node_overlap_banded,
-    )
-
-    rows = []
-    for n in range(6):
-        for i in range(20):
-            rows.append((n, i + (n % 3) * 12))  # overlapping item blocks
-    rows += [(100, i) for i in range(20)] + [(101, i) for i in range(18)]
-    m = spark.createDataFrame(rows, ["node", "item"])
-    exact = {
-        (r.a, r.b): (r.common, r.na, r.nb, r.jaccard)
-        for r in node_overlap(m, top_k=100).collect()
-    }
-    banded = node_overlap_banded(m, top_k=100, n_hashes=8, bands=8).collect()
-    assert banded, "banded path must emit candidates on this corpus"
-    for r in banded:
-        assert exact[(r.a, r.b)] == (r.common, r.na, r.nb, r.jaccard), r
-    # the engineered near-identical pair (s = 18/20 = 0.9) must be
-    # recalled at bands=8/r=1 (P = 1-(1-0.9)^8, deterministic given
-    # the fixed xxhash64 family) and carry its exact jaccard
-    hit = [r for r in banded if (r.a, r.b) == (100, 101)]
-    assert hit and hit[0].jaccard == 0.9, hit
-
-
-@pytest.mark.skipif(
-    not __import__("os").path.isdir("/tmp/sf1"),
-    reason="sf1 scratch corpus not built (tools/make_sf1.py)",
-)
-def test_node_overlap_banding_crossover_sf1(spark):
-    """EXECUTED sf1 probe of the q_supplier_overlap LSH-banding
-    crossover (round-12 brief task 5), pinning both halves of the
-    measured answer:
-
-    NEGATIVE (why the exact inverted index stays the default for this
-    query): the sf1 supplier-part graph is a LOW-SIMILARITY regime —
-    the exact top-25 jaccard tops out at ~0.035, where the banding
-    S-curve 1-(1-s^r)^b gives ~25% recall at (8,8) while the candidate
-    stream balloons with worthless low-sim pairs (measured at pin
-    time: banded(8,8) 79.6 s vs exact 24.6 s contended, with top-25
-    disagreement). Banding does not cross over by SIZE here; it
-    crosses over by SIMILARITY REGIME.
-
-    POSITIVE (the regime banding exists for, executed on the same sf1
-    corpus): inject 10 near-duplicate supplier clones (~90% of each
-    item set kept by a deterministic hash subset, exact jaccard
-    0.88-0.91). At (n_hashes=8, bands=4, r=2) — per-pair recall
-    1-(1-0.81)^4 ≈ 0.9987 — the banded path must recover ALL 10 clone
-    pairs, rank them as the top 10 (the background corpus maxes at
-    0.035), and score every reported pair EXACTLY (verified against a
-    candidate-restricted recomputation from the same df-capped
-    postings — candidate-set equivalence on the df-capped region)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from market_analyze_data_stream_processing_spark.operators.graph import (
-        node_overlap_banded,
-    )
-
-    OFFSET = 1_000_000_000
-    li = (
-        spark.read.parquet(os.path.join("/tmp/sf1", "lineitem.parquet"))
-        .select(F.col("l_suppkey").alias("node"), F.col("l_partkey").alias("item"))
-    )
-    base = li.where(F.col("node").isin(list(range(1, 11))))
-    clone = base.where(F.pmod(F.xxhash64("item"), F.lit(10)) != 0).select(
-        (F.col("node") + F.lit(OFFSET)).alias("node"), "item"
-    )
-    m2 = li.union(clone)
-    out = node_overlap_banded(m2, top_k=25, n_hashes=8, bands=4).collect()
-    assert len(out) == 25
-    clone_pairs = [r for r in out if r.b - r.a == OFFSET]
-    assert len(clone_pairs) == 10, (
-        f"banding must recall all 10 injected near-dup pairs, got "
-        f"{len(clone_pairs)}"
-    )
-    # they are the 10 most similar pairs in the corpus — must lead the
-    # ranking, each in the designed similarity band
-    assert all(r.b - r.a == OFFSET for r in out[:10])
-    assert all(0.85 <= r.jaccard <= 0.95 for r in out[:10]), out[:10]
-    # candidate-set-restricted EXACT verification: recompute
-    # (common, na, nb) for every reported pair from the df-capped
-    # postings with plain joins — values must be identical
-    m = m2.select(F.col("node").alias("a"), F.col("item").alias("i")).distinct()
-    sizes = m.groupBy("a").agg(F.count(F.lit(1)).alias("n_items"))
-    ok_i = (
-        m.groupBy("i").agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= 50).select("i")
-    )
-    pruned = m.join(ok_i, "i")
-    rep = spark.createDataFrame(
-        [(r.a, r.b) for r in out], ["a", "b"]
-    )
-    common = (
-        rep.join(pruned, "a")
-        .join(
-            pruned.select(F.col("a").alias("b"), F.col("i")), ["b", "i"]
-        )
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    truth = {
-        (r.a, r.b): (r.common, r.na, r.nb)
-        for r in common.join(sizes.select(F.col("a"), F.col("n_items").alias("na")), "a")
-        .join(sizes.select(F.col("a").alias("b"), F.col("n_items").alias("nb")), "b")
-        .collect()
-    }
-    for r in out:
-        assert truth[(r.a, r.b)] == (r.common, r.na, r.nb), r
-
-
-def test_node_overlap_banded_rejects_bad_band_geometry(spark):
-    """bands must be >= 1 and divide n_hashes exactly: bands > n_hashes
-    would hash zero slots per band (runtime error deep in the plan) and
-    a non-dividing bands would silently drop remainder slots, lowering
-    recall below the documented S-curve — both rejected at entry."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from market_analyze_data_stream_processing_spark.operators.graph import (
-        node_overlap_banded,
-    )
-
-    m = spark.createDataFrame([(1, 10), (2, 10)], ["node", "item"])
-    with pytest.raises(ValueError, match="divide n_hashes"):
-        node_overlap_banded(m, n_hashes=8, bands=16)
-    with pytest.raises(ValueError, match="divide n_hashes"):
-        node_overlap_banded(m, n_hashes=8, bands=3)
-    with pytest.raises(ValueError, match="divide n_hashes"):
-        node_overlap_banded(m, n_hashes=8, bands=0)
-    # the valid geometries still build a plan
-    assert node_overlap_banded(m, n_hashes=8, bands=4).columns == [
-        "a", "b", "common", "na", "nb", "jaccard",
-    ]

@@ -138,10 +138,8 @@ def test_pq_book_cache_rebuild_contract(spark, tmp_path):
     import os
     import time
 
-    from market_analyze_data_stream_processing_spark.plans.vectors import (
-        _PQ_BOOK_CACHE,
-        _pq_book,
-    )
+    from market_analyze_data_stream_processing_spark import cache
+    from market_analyze_data_stream_processing_spark.plans.vectors import _pq_book
 
     sf_dir = str(tmp_path)
     path = os.path.join(sf_dir, "embeddings.parquet")
@@ -155,5 +153,6 @@ def test_pq_book_cache_rebuild_contract(spark, tmp_path):
     ).parquet(path)
     b2 = _pq_book(spark, sf_dir)
     assert b2 is not b1  # rebuilt for the fresh corpus
-    # Superseded-mtime entry for the same path was evicted on insert.
-    assert len([k for k in _PQ_BOOK_CACHE if k[0] == sf_dir]) == 1
+    # The superseded entry was replaced under the same key: one entry
+    # for this corpus, carrying the fresh file's token.
+    assert cache.tokens("pq_book")[sf_dir] == cache.file_token(path)

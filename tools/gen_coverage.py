@@ -78,25 +78,6 @@ def main() -> None:
         "exercises first: broker connectivity, auth, and the connector jar "
         "itself.",
         "",
-        "## transformWithStateInPandas engine status (X3/A8 TWS twins)",
-        "",
-        "The TWS processors (`streaming/stateful.py:317`, `:336`) are "
-        "implemented and their LOGIC is executed everywhere via dict-backed "
-        "fake state handles plus parity tests against the legacy "
-        "`applyInPandasWithState` forms (`tests/test_stateful_tws.py` — "
-        "these run and pass in this env). The ENGINE-backed runs are gated: "
-        "`transformWithStateInPandas` requires the `google.protobuf` Python "
-        "package for its state-server wire protocol, and this environment "
-        "has no protobuf and no way to install it (no network, no pip). "
-        "This is a hard Python-dependency gate, not a Spark-config choice — "
-        "the RocksDB state-store provider conf "
-        "(`spark.sql.streaming.stateStore.providerClass = org.apache.spark."
-        "sql.execution.streaming.state.RocksDBStateStoreProvider`) is set "
-        "up and ready in `ROCKSDB_PROVIDER`, but enabling it cannot "
-        "substitute for the missing protobuf import, which fails before any "
-        "state store is reached. Where protobuf exists, `needs_tws_engine` "
-        "un-gates automatically.",
-        "",
         "## Dashboard shell (app.py)",
         "",
         "The reference's Streamlit surfaces (src/app/main.py:219-487) — "
