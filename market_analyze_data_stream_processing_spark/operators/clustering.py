@@ -10,9 +10,7 @@ shuffle, no per-iteration codegen — centroids travel in the task
 closure, so updating them never recompiles a plan.
 
 At 100 TB the assignment stage is embarrassingly parallel and the only
-data movement per iteration is k·dim doubles per partition. The
-expression form (``assign_clusters``) remains for oracle-mirrorable
-one-shot assignment against fixed centroids.
+data movement per iteration is k·dim doubles per partition.
 """
 
 from __future__ import annotations
@@ -21,7 +19,27 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine_sim, lit_vector
+
+def _unit(A: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (an all-zero row stays zero)."""
+    return A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-30)
+
+
+def _nearest(centroids: dict[int, np.ndarray]):
+    """Nearest-centroid-by-cosine kernel shared by every Arrow pass.
+    Returns ``(ids, nearest)``: the sorted cluster ids, and a function
+    mapping a row matrix X to ``(Xn, idx)`` — X's unit rows and each
+    row's position in ``ids``. Ties break to the highest cluster id:
+    the first max of the reversed columns is the highest-id argmax."""
+    ids = sorted(centroids)
+    Cn = _unit(np.stack([np.asarray(centroids[c], dtype=np.float64) for c in ids]))
+
+    def nearest(X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        Xn = _unit(X)
+        sims = Xn @ Cn.T
+        return Xn, sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
+
+    return ids, nearest
 
 
 def _lloyd_step(
@@ -52,9 +70,7 @@ def _lloyd_step(
 
     import pandas as pd
 
-    ids = sorted(centroids)
-    C = np.stack([np.asarray(centroids[c], dtype=np.float64) for c in ids])
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
+    ids, nearest = _nearest(centroids)
     id_arr = np.asarray(ids, dtype=np.int64)
     schema = StructType(
         [
@@ -73,10 +89,7 @@ def _lloyd_step(
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-            sims = Xn @ Cn.T
-            idx = sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
-            assigned = id_arr[idx]
+            assigned = id_arr[nearest(X)[1]]
             for c in np.unique(assigned):
                 m = assigned == c
                 counts[int(c)] = counts.get(int(c), 0) + int(m.sum())
@@ -101,24 +114,6 @@ def _lloyd_step(
     return {c: (n, s / n) for c, (n, s) in agg.items()}
 
 
-def assign_clusters(
-    df: DataFrame, centroids: dict[int, np.ndarray], vec_col: str = "embedding",
-    out_col: str = "cluster",
-) -> DataFrame:
-    """Nearest-centroid assignment by cosine — one array_max over
-    (sim, cluster) structs, so each centroid fold is evaluated exactly
-    once per row. Ties break to the highest cluster id (struct max),
-    matching the previous when-ladder's last-match-wins order."""
-    emb = as_double(F.col(vec_col))
-    pairs = F.array(
-        *[
-            F.struct(cosine_sim(emb, lit_vector(v.tolist())).alias("s"), F.lit(c).alias("c"))
-            for c, v in sorted(centroids.items())
-        ]
-    )
-    return df.withColumn(out_col, F.array_max(pairs)["c"])
-
-
 def assign_clusters_arrow(
     df: DataFrame,
     centroids: dict[int, np.ndarray],
@@ -126,33 +121,24 @@ def assign_clusters_arrow(
     out_col: str = "cluster",
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE Arrow-batched matmul per batch
-    (``mapInPandas`` + numpy) — the hot-loop form ``kmeans`` iterates on.
-
-    The expression form (``assign_clusters``) re-codegens a k×dim literal
-    fold tree every iteration (centroid values are plan literals, so each
-    update forces a fresh wholestage compile — that JIT dominated the
-    bench at small SF and grows with k·dim). Here centroids ride in the
-    task closure (k·dim floats, broadcast-tiny), rows stream through as
-    Arrow batches, and the k·dim·batch similarity is one BLAS matmul —
-    the same shape MLlib's k-means uses. Same cosine semantics, ties
-    break to the highest cluster id (argmax over reversed columns)."""
+    (``mapInPandas`` + numpy). An expression form would re-codegen a
+    k×dim literal fold tree per centroid set (centroid values are plan
+    literals, so each update forces a fresh wholestage compile — that
+    JIT dominated the bench at small SF and grows with k·dim). Here
+    centroids ride in the task closure (k·dim floats, broadcast-tiny),
+    rows stream through as Arrow batches, and the k·dim·batch
+    similarity is one BLAS matmul — the same shape MLlib's k-means
+    uses. Ties break to the highest cluster id (``_nearest``)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    ids = sorted(centroids)
-    C = np.stack([np.asarray(centroids[c], dtype=np.float64) for c in ids])
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
+    ids, nearest = _nearest(centroids)
     id_arr = np.asarray(ids, dtype=np.int64)
     schema = StructType(df.schema.fields + [StructField(out_col, IntegerType())])
 
     def part(batches):
         for pdf in batches:
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-            sims = Xn @ Cn.T
-            # first max of the reversed columns = highest-id argmax,
-            # matching the expression form's struct-max tie-break
-            idx = sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
-            pdf[out_col] = id_arr[idx].astype(np.int32)
+            pdf[out_col] = id_arr[nearest(X)[1]].astype(np.int32)
             yield pdf
 
     return df.mapInPandas(part, schema)
@@ -180,11 +166,11 @@ def cluster_quality_partials(
     vec_col: str,
 ) -> tuple[int, float, float]:
     """One fused Arrow pass for the clustering-quality contract: assign
-    each row under ``assign_cents`` (identical argmax-over-reversed-
-    columns tie-break as ``assign_clusters_arrow``), then accumulate the
-    row's cosine to its OWN post-update centroid (``own_cents``) and to
-    the single global centroid. Returns (n, sum_sim_own, sum_sim_glob)
-    with the driver reduction in partition-id order (replay-stable).
+    each row under ``assign_cents`` (the ``_nearest`` kernel of
+    ``assign_clusters_arrow``), then accumulate the row's cosine to its
+    OWN post-update centroid (``own_cents``) and to the single global
+    centroid. Returns (n, sum_sim_own, sum_sim_glob) with the driver
+    reduction in partition-id order (replay-stable).
 
     This replaces a dim-wide avg aggregate + a k-branch literal-vector
     CASE fold: both re-codegen on every run because the centroid values
@@ -202,19 +188,17 @@ def cluster_quality_partials(
 
     import pandas as pd
 
-    ids = sorted(assign_cents)
-    C = np.stack([np.asarray(assign_cents[c], dtype=np.float64) for c in ids])
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
+    ids, nearest = _nearest(assign_cents)
     # own_cents only contains clusters seen in the final assignment; a
     # cluster absent there can never be a row's own, so its slot value
     # is irrelevant (zeros keep the stack rectangular).
     M = np.stack(
         [
-            np.asarray(own_cents.get(c, np.zeros(C.shape[1])), dtype=np.float64)
+            np.asarray(own_cents.get(c, np.zeros(len(glob))), dtype=np.float64)
             for c in ids
         ]
     )
-    Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
+    Mn = _unit(M)
     g = np.asarray(glob, dtype=np.float64)
     gn = g / max(float(np.linalg.norm(g)), 1e-30)
     schema = StructType(
@@ -234,9 +218,7 @@ def cluster_quality_partials(
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-            sims = Xn @ Cn.T
-            idx = sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
+            Xn, idx = nearest(X)
             so += float((Xn * Mn[idx]).sum())
             sg += float((Xn @ gn).sum())
             n += len(X)

@@ -169,8 +169,11 @@ def _scan_splits(df: DataFrame) -> int | None:
         open_cost = int(jconf.filesOpenCostInBytes())
     except Exception:
         max_pb, open_cost = 128 * 1024 * 1024, 4 * 1024 * 1024
+    # FilePartition.maxSplitBytes: minPartitionNum, else the session's
+    # leafNodeDefaultParallelism, else the context's defaultParallelism
     min_pn = int(
         spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
         or spark.sparkContext.defaultParallelism
     )
     total_row_groups = 0

@@ -21,7 +21,7 @@ from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.profiling import bucket_index, psi_from_counts
+from .stateful import _apply
 
 DRIFT_OUTPUT_SCHEMA = StructType(
     [
@@ -89,10 +90,4 @@ def drift_monitor_stateful(
             }
         )
 
-    return stream.groupBy(group).applyInPandasWithState(
-        fn,
-        outputStructType=DRIFT_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _apply(stream, [group], fn, DRIFT_OUTPUT_SCHEMA, _STATE_SCHEMA)

@@ -1,17 +1,28 @@
 """Custom stateful streaming operators (SURVEY.md §2.9 X7 low-latency
-path, §2.10 UDAF surface): ``applyInPandasWithState`` keeps the latest
-row per key in bounded state — the reference's LATEST_TECH_*/
-LATEST_METRICS_* live-overwrite semantics without a table rewrite per
-trigger.
+path, §2.10 UDAF surface), each an ``applyInPandasWithState`` operator
+with O(live keys) state in the checkpointed state store:
 
-This is the lower-latency alternative to the foreachBatch merge in
-``upsert.py``: state lives in the state store (checkpointed, bounded by
-TTL timeouts), and each trigger emits only changed keys.
+- ``latest_per_key_stateful``: the latest row per key — the reference's
+  LATEST_TECH_*/LATEST_METRICS_* live-overwrite semantics without a
+  table rewrite per trigger (the lower-latency alternative to the
+  foreachBatch merge in ``upsert.py``), bounded by TTL timeouts;
+- the streaming twins of batch operators: recursive EWMA, Wilder RSI,
+  OBV, anchored VWAP, the Misra-Gries heavy-hitter watchlist, CUSUM
+  and SCD Type-2 (``drift.py`` adds the PSI drift monitor).
+
+Two private helpers hold what the operators share. ``_apply`` is the
+one ``applyInPandasWithState`` call site. ``_seq_fold`` owns the replay
+rule of the six seq-ordered twins: rows at or before the seq already in
+state are dropped and duplicate seqs inside a batch collapse to their
+first copy, so a replayed micro-batch (restart from a checkpoint, an
+at-least-once source) emits identical values exactly once. Each twin
+keeps only its pure per-batch ``step`` and its schemas.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import math
+from collections.abc import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -25,6 +36,60 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+
+def _apply(
+    stream: DataFrame,
+    keys: Sequence[str],
+    fn,
+    out_schema: StructType,
+    state_schema: StructType,
+    mode: str = "update",
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """The package's one ``applyInPandasWithState`` call: group
+    ``stream`` by ``keys`` and run ``fn`` per key per trigger."""
+    return stream.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _seq_fold(step: Callable, init: tuple):
+    """Wrap a pure per-batch ``step(key, state, pdf) -> (out, new_state)``
+    into an ``applyInPandasWithState`` function that owns the replay
+    rule and the state round trip.
+
+    The state tuple's FIRST field is the last processed seq (``init``
+    seeds a new key). The trigger's chunks are concatenated and
+    stable-sorted by seq; rows at or before the state's seq are dropped
+    (cross-batch replays) and duplicate seqs inside the batch keep their
+    first copy (in-batch replays). ``step`` sees only the surviving rows,
+    in seq order, and returns the new state itself — the fold never
+    derives it — with ``None`` meaning "leave the state as it is"."""
+
+    def fn(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        parts = [p for p in pdfs if not p.empty]
+        if not parts:
+            return
+        cur = state.get if state.exists else init
+        pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
+        pdf = pdf[pdf["seq"] > cur[0]].drop_duplicates(subset=["seq"], keep="first")
+        if pdf.empty:
+            return
+        out, new_state = step(key, cur, pdf)
+        if new_state is not None:
+            state.update(new_state)
+        if out is not None:
+            yield out
+
+    return fn
+
 
 LATEST_STATE_SCHEMA = StructType(
     [
@@ -51,7 +116,8 @@ def _make_latest_fn(ttl_ms: int | None):
         """Keep the max-seq row per key; emit only when it advances.
         With a TTL, a key idle past ``ttl_ms`` is evicted (X6's stateful
         form: bounded state under key churn) — its next arrival starts
-        from scratch and re-emits as new."""
+        from scratch and re-emits as new. Not a ``_seq_fold``: the TTL
+        clock is refreshed by ANY activity, stale rows included."""
         if state.hasTimedOut:
             state.remove()
             return
@@ -81,6 +147,28 @@ def _make_latest_fn(ttl_ms: int | None):
     return _latest_fn
 
 
+def latest_per_key_stateful(
+    stream: DataFrame, key_col: str = "key", ttl_ms: int | None = None
+) -> DataFrame:
+    """A8/X7 streaming form: latest row per key via applyInPandasWithState.
+
+    Update-mode output: one row per key per trigger IF it changed. State
+    is one tuple per live key — at 10 M keys that's MBs per executor,
+    partitioned by the groupBy hash. ``ttl_ms`` bounds state under
+    unbounded key churn (one-shot keys age out instead of accumulating
+    forever); an evicted key that reappears is treated as brand new,
+    whatever its seq."""
+    return _apply(
+        stream, [key_col], _make_latest_fn(ttl_ms),
+        LATEST_OUTPUT_SCHEMA, LATEST_STATE_SCHEMA,
+        timeout=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if ttl_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
 EWMA_STATE_SCHEMA = StructType(
     [
         StructField("seq", LongType()),
@@ -98,71 +186,6 @@ EWMA_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _ewma_step(
-    alpha: float, key0: str, last_seq: int, last: float | None,
-    parts: list[pd.DataFrame],
-) -> pd.DataFrame | None:
-    """One micro-batch of the recursive (adjust=False) EWMA:
-    e_t = (1-alpha)*e_{t-1} + alpha*x_t, seeded from state. Rows at or
-    before the last processed seq are dropped (late-replay guard) and
-    duplicate seqs inside the batch are collapsed to their first copy,
-    so replays emit identical values exactly once. Pure pandas, so the
-    recursion can be unit-tested without a stream. Returns the output
-    frame (its last row is the new state) or None when nothing advanced."""
-    if not parts:
-        return None
-    pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-    pdf = pdf[pdf["seq"] > last_seq]
-    # The seq > last_seq guard only drops duplicates from EARLIER
-    # micro-batches; two copies of one seq inside the same batch
-    # would both advance the recursion. Keep the first per seq so
-    # in-batch replays emit once, like cross-batch ones.
-    pdf = pdf.drop_duplicates(subset=["seq"], keep="first")
-    # A valueless tick (null/NaN/inf price) has no place in the
-    # recursion e_t = (1-a)e + a*x — dropped here, exactly like the
-    # batch kernel's null-skipping weighted sums, instead of poisoning
-    # the state with NaN forever (the drift-monitor totality rule:
-    # streaming twins must be at least as robust as their batch forms).
-    fin = pd.to_numeric(pdf["value"], errors="coerce").astype(float)
-    pdf = pdf[np.isfinite(fin)]
-    if pdf.empty:
-        return None
-    vals = pdf["value"].astype(float)
-    if last is None:
-        ewma = vals.ewm(alpha=alpha, adjust=False).mean()
-    else:
-        # Prepend the state value as the seed row, then drop it:
-        # ewm(adjust=False) starts the recursion at its first element.
-        seeded = pd.concat([pd.Series([last]), vals], ignore_index=True)
-        ewma = seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:]
-    return pd.DataFrame(
-        {
-            "key": key0,
-            "seq": pdf["seq"].astype("int64").to_numpy(),
-            "value": vals.to_numpy(),
-            "ewma": ewma.to_numpy(),
-        }
-    )
-
-
-def _make_ewma_fn(alpha: float):
-    def _ewma_fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        """State per key is ONE (seq, ewma) pair — unlike the batch
-        kernel (operators/analytics q_ewma path) no history is held,
-        which is what makes the recursion the streaming-native form of
-        the operator. Batch semantics live in _ewma_step."""
-        last_seq, last = state.get if state.exists else (-1, None)
-        out = _ewma_step(alpha, key[0], last_seq, last, [p for p in pdfs if not p.empty])
-        if out is None:
-            return
-        state.update((int(out["seq"].iloc[-1]), float(out["ewma"].iloc[-1])))
-        yield out
-
-    return _ewma_fn
-
-
 def ewma_per_key_stateful(
     stream: DataFrame, alpha: float = 0.1, key_col: str = "key"
 ) -> DataFrame:
@@ -170,43 +193,45 @@ def ewma_per_key_stateful(
     applyInPandasWithState. Emits one row per input row with the running
     smoothed value; state is a single (seq, ewma) pair per key, so state
     size is O(live keys) regardless of stream length — the unbounded-
-    history operator the batch window form cannot express incrementally."""
-    return (
-        stream.groupBy(key_col)
-        .applyInPandasWithState(
-            _make_ewma_fn(alpha),
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    history operator the batch window form cannot express incrementally
+    (unlike the batch kernel, operators/analytics' q_ewma path, no
+    history is held)."""
+
+    def step(key, state, pdf):
+        """e_t = (1-alpha)*e_{t-1} + alpha*x_t (adjust=False), seeded
+        from state."""
+        # A valueless tick (null/NaN/inf price) has no place in the
+        # recursion — dropped here, exactly like the batch kernel's
+        # null-skipping weighted sums, instead of poisoning the state
+        # with NaN forever (the drift-monitor totality rule: streaming
+        # twins must be at least as robust as their batch forms). The
+        # stored seq is therefore the last FINITE row's.
+        fin = pd.to_numeric(pdf["value"], errors="coerce").astype(float)
+        pdf = pdf[np.isfinite(fin)]
+        if pdf.empty:
+            return None, None
+        vals = pdf["value"].astype(float)
+        last = state[1]
+        if last is None:
+            ewma = vals.ewm(alpha=alpha, adjust=False).mean()
+        else:
+            # Prepend the state value as the seed row, then drop it:
+            # ewm(adjust=False) starts the recursion at its first element.
+            seeded = pd.concat([pd.Series([last]), vals], ignore_index=True)
+            ewma = seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:]
+        out = pd.DataFrame(
+            {
+                "key": key[0],
+                "seq": pdf["seq"].astype("int64").to_numpy(),
+                "value": vals.to_numpy(),
+                "ewma": ewma.to_numpy(),
+            }
         )
-    )
+        return out, (int(out["seq"].iloc[-1]), float(out["ewma"].iloc[-1]))
 
-
-def latest_per_key_stateful(
-    stream: DataFrame, key_col: str = "key", ttl_ms: int | None = None
-) -> DataFrame:
-    """A8/X7 streaming form: latest row per key via applyInPandasWithState.
-
-    Update-mode output: one row per key per trigger IF it changed. State
-    is one tuple per live key — at 10 M keys that's MBs per executor,
-    partitioned by the groupBy hash. ``ttl_ms`` bounds state under
-    unbounded key churn (one-shot keys age out instead of accumulating
-    forever); an evicted key that reappears is treated as brand new,
-    whatever its seq."""
-    return (
-        stream.groupBy(key_col)
-        .applyInPandasWithState(
-            _make_latest_fn(ttl_ms),
-            outputStructType=LATEST_OUTPUT_SCHEMA,
-            stateStructType=LATEST_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if ttl_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return _apply(
+        stream, [key_col], _seq_fold(step, (-1, None)),
+        EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA,
     )
 
 
@@ -230,99 +255,6 @@ RSI_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _rsi_step(
-    n: int,
-    key0: str,
-    last_seq: int,
-    last_price: float | None,
-    g: float,
-    l: float,
-    nd: int,
-    parts: list[pd.DataFrame],
-):
-    """One micro-batch of Wilder's recursive RSI — the streaming-native
-    smoothing the batch Cutler form (operators/indicators.with_rsi)
-    deliberately avoids: avg = (prev*(n-1) + cur)/n after an n-delta
-    simple-average warmup, O(1) state per key, unbounded history.
-
-    During warmup (``nd < n``) the ``g``/``l`` state fields hold SUMS of
-    gains/losses; at the nth delta they become Wilder averages. Same
-    late-replay and in-batch-duplicate guards as ``_ewma_step`` (shared
-    replay semantics; pure pandas/python). RSI is null
-    until n deltas exist; zero-denominator conventions are the batch
-    form's: all-loss ⇒ 0, all-gain ⇒ 100, flat ⇒ 50.
-
-    Returns ``(out_frame, new_state)`` or ``(None, None)``."""
-    if not parts:
-        return None, None
-    pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-    pdf = pdf[pdf["seq"] > last_seq]
-    pdf = pdf.drop_duplicates(subset=["seq"], keep="first")
-    if pdf.empty:
-        return None, None
-    def cur():
-        if nd < n:
-            return None
-        if l == 0.0:
-            return 50.0 if g == 0.0 else 100.0
-        return 100.0 - 100.0 / (1.0 + g / l)
-
-    out_rsi = []
-    for x in pdf["value"].astype(float):
-        prev, last_price = last_price, x
-        d = x - prev if prev is not None else float("nan")
-        # a non-finite delta — series head, null/NaN price on either
-        # side (batch: lag over NULL yields a NULL delta that __has
-        # skips) — advances nothing: the smoothed averages, the warmup
-        # count, and therefore the RSI are unchanged; the row still
-        # emits the current value. Totality: never count or accumulate
-        # NaN (the drift-monitor rule).
-        if not np.isfinite(d):
-            out_rsi.append(cur())
-            continue
-        gain = d if d > 0 else 0.0
-        loss = -d if d < 0 else 0.0
-        if nd < n:
-            g += gain
-            l += loss
-            nd += 1
-            if nd == n:
-                g /= n
-                l /= n
-        else:
-            g = (g * (n - 1) + gain) / n
-            l = (l * (n - 1) + loss) / n
-        out_rsi.append(cur())
-    out = pd.DataFrame(
-        {
-            "key": key0,
-            "seq": pdf["seq"].astype("int64").to_numpy(),
-            "value": pdf["value"].astype(float).to_numpy(),
-            "rsi": pd.array(out_rsi, dtype="float64"),
-        }
-    )
-    return out, (int(out["seq"].iloc[-1]), float(last_price), float(g), float(l), int(nd))
-
-
-def _make_rsi_fn(n: int):
-    def _rsi_fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        last_seq, last_price, g, l, nd = (
-            state.get if state.exists else (-1, None, 0.0, 0.0, 0)
-        )
-        out, new_state = _rsi_step(
-            n, key[0], last_seq, last_price, g, l, nd,
-            [p for p in pdfs if not p.empty],
-        )
-        if out is None:
-            return
-        state.update(new_state)
-        yield out
-
-    return _rsi_fn
-
-
 def rsi_per_key_stateful(
     stream: DataFrame, n: int = 14, key_col: str = "key"
 ) -> DataFrame:
@@ -331,15 +263,64 @@ def rsi_per_key_stateful(
     (seq, last_price, avg_gain, avg_loss, n_deltas) tuple — O(live keys)
     regardless of stream length, the incremental form the bounded-window
     batch operator cannot express."""
-    return (
-        stream.groupBy(key_col)
-        .applyInPandasWithState(
-            _make_rsi_fn(n),
-            outputStructType=RSI_OUTPUT_SCHEMA,
-            stateStructType=RSI_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+
+    def step(key, state, pdf):
+        """Wilder's smoothing — the streaming-native form the batch
+        Cutler RSI (operators/indicators.with_rsi) deliberately avoids:
+        avg = (prev*(n-1) + cur)/n after an n-delta simple-average
+        warmup. During warmup (``nd < n``) the ``g``/``l`` state fields
+        hold SUMS of gains/losses; at the nth delta they become Wilder
+        averages. RSI is null until n deltas exist; zero-denominator
+        conventions are the batch form's: all-loss ⇒ 0, all-gain ⇒ 100,
+        flat ⇒ 50."""
+        _, last_price, g, l, nd = state
+
+        def cur():
+            if nd < n:
+                return None
+            if l == 0.0:
+                return 50.0 if g == 0.0 else 100.0
+            return 100.0 - 100.0 / (1.0 + g / l)
+
+        out_rsi = []
+        for x in pdf["value"].astype(float):
+            prev, last_price = last_price, x
+            d = x - prev if prev is not None else float("nan")
+            # a non-finite delta — series head, null/NaN price on either
+            # side (batch: lag over NULL yields a NULL delta that __has
+            # skips) — advances nothing: the smoothed averages, the warmup
+            # count, and therefore the RSI are unchanged; the row still
+            # emits the current value. Totality: never count or accumulate
+            # NaN (the drift-monitor rule).
+            if not np.isfinite(d):
+                out_rsi.append(cur())
+                continue
+            gain = d if d > 0 else 0.0
+            loss = -d if d < 0 else 0.0
+            if nd < n:
+                g += gain
+                l += loss
+                nd += 1
+                if nd == n:
+                    g /= n
+                    l /= n
+            else:
+                g = (g * (n - 1) + gain) / n
+                l = (l * (n - 1) + loss) / n
+            out_rsi.append(cur())
+        out = pd.DataFrame(
+            {
+                "key": key[0],
+                "seq": pdf["seq"].astype("int64").to_numpy(),
+                "value": pdf["value"].astype(float).to_numpy(),
+                "rsi": pd.array(out_rsi, dtype="float64"),
+            }
         )
+        return out, (int(out["seq"].iloc[-1]), float(last_price), float(g), float(l), int(nd))
+
+    return _apply(
+        stream, [key_col], _seq_fold(step, (-1, None, 0.0, 0.0, 0)),
+        RSI_OUTPUT_SCHEMA, RSI_STATE_SCHEMA,
     )
 
 
@@ -361,30 +342,12 @@ OBV_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _obv_step(
-    key0: str,
-    last_seq: int,
-    last_price: float | None,
-    obv: int,
-    parts: list[pd.DataFrame],
-) -> pd.DataFrame | None:
-    """One micro-batch of streaming OBV: obv += sign(Δprice)·vol, seeded
-    from state. Same replay discipline as _ewma_step (rows at or before
-    the last processed seq dropped; in-batch duplicate seqs collapsed to
-    their first copy), and the same exactness as the batch operator —
-    the accumulator is an INT, so streaming and batch agree bit-for-bit,
-    not just to tolerance. Returns the output frame (its last row is the
-    new state) or None when nothing advanced."""
-    if not parts:
-        return None
-    pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-    pdf = pdf[pdf["seq"] > last_seq]
-    pdf = pdf.drop_duplicates(subset=["seq"], keep="first")
-    if pdf.empty:
-        return None
+def _obv_step(key, state, pdf):
+    """obv += sign(Δprice)·vol, seeded from the (seq, price, obv) state.
+    The accumulator is an INT, so streaming and batch agree bit-for-bit,
+    not just to tolerance."""
+    _, prev, acc = state
     out_obv = []
-    prev = last_price
-    acc = obv
     # vol through float so a null survives as NaN instead of crashing
     # astype(int); NaN-vs-NaN price comparisons are False, so a
     # valueless tick moves OBV by nothing — the batch form's
@@ -399,49 +362,26 @@ def _obv_step(
                 acc -= step
         prev = price
         out_obv.append(acc)
-    return pd.DataFrame(
+    out = pd.DataFrame(
         {
-            "key": key0,
+            "key": key[0],
             "seq": pdf["seq"].astype("int64").to_numpy(),
             "price": pdf["price"].astype(float).to_numpy(),
             "obv": pd.array(out_obv, dtype="int64"),
         }
     )
-
-
-def _obv_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """State per key is ONE (seq, price, obv) triple — O(live keys)
-    whatever the stream length, the streaming-native form of the batch
-    running sum (operators/indicators.with_obv)."""
-    last_seq, last_price, obv = state.get if state.exists else (-1, None, 0)
-    out = _obv_step(
-        key[0], last_seq, last_price, obv, [p for p in pdfs if not p.empty]
-    )
-    if out is None:
-        return
-    state.update(
-        (
-            int(out["seq"].iloc[-1]),
-            float(out["price"].iloc[-1]),
-            int(out["obv"].iloc[-1]),
-        )
-    )
-    yield out
+    return out, (int(out["seq"].iloc[-1]), float(prev), int(acc))
 
 
 def obv_per_key_stateful(stream: DataFrame, key_col: str = "key") -> DataFrame:
     """Streaming twin of ``operators.indicators.with_obv``: per-key
     on-balance volume via applyInPandasWithState. Input columns:
-    (key, seq, price, vol). Integer accumulation makes the twin
-    BIT-EQUAL to the batch operator over the same rows."""
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _obv_fn,
-        outputStructType=OBV_OUTPUT_SCHEMA,
-        stateStructType=OBV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    (key, seq, price, vol). State per key is ONE (seq, price, obv)
+    triple; integer accumulation makes the twin BIT-EQUAL to the batch
+    operator over the same rows."""
+    return _apply(
+        stream, [key_col], _seq_fold(_obv_step, (-1, None, 0)),
+        OBV_OUTPUT_SCHEMA, OBV_STATE_SCHEMA,
     )
 
 
@@ -464,24 +404,10 @@ VWAP_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _vwap_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Anchored VWAP, streaming form: state is one (seq, Σpv, Σv)
-    triple per (key, session) group — the session anchor IS part of the
-    grouping key, so the reset-at-open semantics of the batch operator
-    (operators.indicators.with_vwap_anchored) fall out of state scoping
-    rather than windowing; an ended session's state simply stops
-    receiving rows. Same replay discipline as the other kernels."""
-    last_seq, pv, v = state.get if state.exists else (-1, 0.0, 0)
-    parts = [p for p in pdfs if not p.empty]
-    if not parts:
-        return
-    pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-    pdf = pdf[pdf["seq"] > last_seq]
-    pdf = pdf.drop_duplicates(subset=["seq"], keep="first")
-    if pdf.empty:
-        return
+def _vwap_step(key, state, pdf):
+    """Running Σpv / Σv from the (seq, Σpv, Σv) state of one
+    (key, session) group."""
+    _, pv, v = state
     out_vwap = []
     # vol through float (null -> NaN, never an astype(int) crash); a
     # row with a non-finite price or vol contributes nothing to either
@@ -492,8 +418,7 @@ def _vwap_fn(
             pv += price * vol
             v += int(vol)
         out_vwap.append(pv / v if v > 0 else None)
-    state.update((int(pdf["seq"].iloc[-1]), float(pv), int(v)))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "key": key[0],
             "session": key[1],
@@ -502,6 +427,7 @@ def _vwap_fn(
             "vwap": out_vwap,
         }
     )
+    return out, (int(pdf["seq"].iloc[-1]), float(pv), int(v))
 
 
 def vwap_per_key_stateful(
@@ -509,13 +435,13 @@ def vwap_per_key_stateful(
 ) -> DataFrame:
     """Streaming twin of ``operators.indicators.with_vwap_anchored``:
     running Σ(price·vol)/Σvol per (key, session). Input columns:
-    (key, session, seq, price, vol)."""
-    return stream.groupBy(key_col, session_col).applyInPandasWithState(
-        _vwap_fn,
-        outputStructType=VWAP_OUTPUT_SCHEMA,
-        stateStructType=VWAP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    (key, session, seq, price, vol). The session anchor IS part of the
+    grouping key, so the batch operator's reset-at-open semantics fall
+    out of state scoping rather than windowing; an ended session's
+    state simply stops receiving rows."""
+    return _apply(
+        stream, [key_col, session_col], _seq_fold(_vwap_step, (-1, 0.0, 0)),
+        VWAP_OUTPUT_SCHEMA, VWAP_STATE_SCHEMA,
     )
 
 
@@ -538,69 +464,35 @@ MG_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _make_mg_fn(k: int):
-    from ..operators.frequency import mg_update
-
-    def _mg_fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        """Streaming Misra-Gries per key: state is the ≤ k counter
-        summary plus (last_seq, n_seen) — O(k) however long the stream
-        runs. Each trigger folds the new rows in seq order (same replay
-        discipline as the other kernels: at-or-before last_seq dropped,
-        in-batch duplicate seqs collapsed) and emits the CURRENT
-        summary — a superset of every item whose running frequency
-        exceeds n_seen/(k+1), the anytime heavy-hitter watchlist."""
-        if state.exists:
-            last_seq, n_seen, items, counts = state.get
-            counters = dict(zip(items, (int(c) for c in counts)))
-        else:
-            last_seq, n_seen, counters = -1, 0, {}
-        parts = [p for p in pdfs if not p.empty]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-        pdf = pdf[pdf["seq"] > last_seq]
-        pdf = pdf.drop_duplicates(subset=["seq"], keep="first")
-        if pdf.empty:
-            return
-        mg_update(counters, pdf["item"], k)
-        n_seen += len(pdf)
-        state.update(
-            (
-                int(pdf["seq"].iloc[-1]),
-                int(n_seen),
-                list(counters.keys()),
-                [int(c) for c in counters.values()],
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "key": key[0],
-                "item": list(counters.keys()),
-                "lb": [int(c) for c in counters.values()],
-                "n_seen": int(n_seen),
-            }
-        )
-
-    return _mg_fn
-
-
 def heavy_hitters_stateful(
     stream: DataFrame, k: int, key_col: str = "key"
 ) -> DataFrame:
     """Streaming twin of ``operators.frequency.heavy_hitters``' first
     pass: an anytime Misra-Gries watchlist per key. Input columns
-    (key, seq, item); emits the ≤ k-row current summary per trigger.
-    Batch parity: folding the same rows in seq order through
-    ``mg_update`` yields the identical summary (the state IS the
-    sequential fold), pinned by tests/test_frequency.py."""
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _make_mg_fn(k),
-        outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=MG_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    (key, seq, item); state is the ≤ k counter summary plus
+    (last_seq, n_seen) — O(k) however long the stream runs. Each
+    trigger folds the new rows in seq order and emits the CURRENT
+    summary (≤ k rows): a superset of every item whose running
+    frequency exceeds n_seen/(k+1). Batch parity: folding the same rows
+    in seq order through ``mg_update`` yields the identical summary
+    (the state IS the sequential fold), pinned by
+    tests/test_frequency.py."""
+    from ..operators.frequency import mg_update
+
+    def step(key, state, pdf):
+        _, n_seen, items, counts = state
+        counters = dict(zip(items, (int(c) for c in counts)))
+        mg_update(counters, pdf["item"], k)
+        n_seen += len(pdf)
+        items, counts = list(counters.keys()), [int(c) for c in counters.values()]
+        out = pd.DataFrame(
+            {"key": key[0], "item": items, "lb": counts, "n_seen": int(n_seen)}
+        )
+        return out, (int(pdf["seq"].iloc[-1]), int(n_seen), items, counts)
+
+    return _apply(
+        stream, [key_col], _seq_fold(step, (-1, 0, [], [])),
+        MG_OUTPUT_SCHEMA, MG_STATE_SCHEMA,
     )
 
 
@@ -635,7 +527,8 @@ def _scd2_fn(
     """Track one open version per key; emit a row the moment a version
     CLOSES (the attribute changed), with its half-open validity
     interval. The open version lives only in state — exactly the rows
-    q_scd2_history marks is_current=0, produced incrementally."""
+    q_scd2_history marks is_current=0, produced incrementally. Not a
+    ``_seq_fold``: events order by (ts_us, event_id), not by a seq."""
     cur = list(state.get) if state.exists else None
     closed = []
     # One global in-trigger sort: the Arrow batches of a trigger arrive
@@ -685,12 +578,9 @@ def scd2_stateful(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
     Expects columns (user_id, ts_us, event_id, event_type); rows must
     arrive in per-key order across triggers for version numbers to
     match the batch derivation (inside a trigger they are sorted)."""
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _scd2_fn,
-        outputStructType=SCD2_OUTPUT_SCHEMA,
-        stateStructType=SCD2_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _apply(
+        stream, [key_col], _scd2_fn, SCD2_OUTPUT_SCHEMA, SCD2_STATE_SCHEMA,
+        mode="append",
     )
 
 
@@ -753,27 +643,13 @@ def cusum_per_key_stateful(
     accumulate as scaled integers and this twin reproduces
     ``operators.changepoint.with_cusum`` bit-for-bit, pinned by
     tests/test_cusum.py's exact-parity assertion."""
-    import math
 
     def dec10(y: float) -> int:
         return int(math.floor(y * 1e10 + 0.5))
 
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        last_seq, p_up, min_up, p_dn, min_dn, n_acc = (
-            state.get if state.exists else (-1, 0, 0, 0, 0, 0)
-        )
+    def step(key, state, pdf):
+        _, p_up, min_up, p_dn, min_dn, n_acc = state
         tgt = targets.get(key[0])
-        parts = [p for p in pdfs if not p.empty]
-        if not parts:
-            return
-        # the twins' shared replay discipline: drop rows at or before
-        # the last processed seq, collapse in-batch duplicates
-        pdf = pd.concat(parts).sort_values("seq", kind="mergesort")
-        pdf = pdf[pdf["seq"] > last_seq].drop_duplicates(
-            subset=["seq"], keep="first"
-        )
         rows = []
         for seq, value in zip(pdf["seq"], pdf["value"]):
             if tgt is None:
@@ -815,21 +691,14 @@ def cusum_per_key_stateful(
             cd = ((p_dn - min(0, min_dn)) + 5) // 10 / 1e9
             rows.append((key[0], int(seq), float(value), cu, cd,
                          int(cu > h), int(cd > h)))
-        if not rows:
-            return
-        state.update(
-            (int(pdf["seq"].iloc[-1]), p_up, min_up, p_dn, min_dn, n_acc)
-        )
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             rows,
             columns=["key", "seq", "value", "cusum_up", "cusum_dn",
                      "alarm_up", "alarm_dn"],
         )
+        return out, (int(pdf["seq"].iloc[-1]), p_up, min_up, p_dn, min_dn, n_acc)
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _apply(
+        stream, [key_col], _seq_fold(step, (-1, 0, 0, 0, 0, 0)),
+        CUSUM_OUTPUT_SCHEMA, CUSUM_STATE_SCHEMA,
     )

@@ -1,9 +1,11 @@
-"""applyInPandasWithState: latest-per-key with bounded state (X7)."""
+"""applyInPandasWithState operators: latest-per-key with bounded state (X7),
+the streaming twins, and a restart/replay differential over all nine."""
 
 from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -496,3 +498,186 @@ def test_vwap_stateful_resets_per_session(spark, tmp_path):
     assert got[("d1", 2)] == (10.0 * 2 + 20.0 * 2) / 4
     assert got[("d2", 3)] == 30.0  # fresh accumulator
     assert got[("d1", 4)] == (10.0 * 2 + 20.0 * 2 + 40.0 * 4) / 8
+
+
+# --- kill-and-restart + replay differential, every stateful operator ---
+
+
+def _x(key, seq):
+    """A small non-monotone series; key B sits 2.0 above key A."""
+    return 10.0 + (seq * 7) % 5 + (2.0 if key == "B" else 0.0)
+
+
+def _restart_cases():
+    """name -> (input schema, operator, row(key, seq, x), output mode,
+    is a seq fold). ``x`` = 999.0 marks a poison row: a replay that
+    must never reach the output."""
+    from market_analyze_data_stream_processing_spark.streaming.drift import (
+        drift_monitor_stateful,
+    )
+    from market_analyze_data_stream_processing_spark.streaming.stateful import (
+        cusum_per_key_stateful,
+        ewma_per_key_stateful,
+        heavy_hitters_stateful,
+        obv_per_key_stateful,
+        rsi_per_key_stateful,
+        scd2_stateful,
+        vwap_per_key_stateful,
+    )
+
+    val = "key string, seq long, value double"
+    bar = "key string, seq long, price double, vol long"
+
+    def val_row(k, s, x):
+        return {"key": k, "seq": s, "value": x}
+
+    def bar_row(k, s, x):
+        return {"key": k, "seq": s, "price": x, "vol": s % 4 + 1}
+
+    return {
+        "latest": (
+            "key string, seq long, value double, payload string",
+            latest_per_key_stateful,
+            lambda k, s, x: {**val_row(k, s, x), "payload": f"{k}{s}"},
+            "update", False,
+        ),
+        "ewma": (
+            val, lambda st: ewma_per_key_stateful(st, alpha=0.3),
+            val_row, "update", True,
+        ),
+        "rsi": (
+            val, lambda st: rsi_per_key_stateful(st, n=3),
+            val_row, "update", True,
+        ),
+        "obv": (bar, obv_per_key_stateful, bar_row, "update", True),
+        "vwap": (
+            "key string, session string, seq long, price double, vol long",
+            vwap_per_key_stateful,
+            lambda k, s, x: {**bar_row(k, s, x), "session": "d1" if s <= 4 else "d2"},
+            "update", True,
+        ),
+        "heavy_hitters": (
+            "key string, seq long, item string",
+            lambda st: heavy_hitters_stateful(st, k=3),
+            lambda k, s, x: {"key": k, "seq": s, "item": "abcz"[int(x) % 4]},
+            "update", True,
+        ),
+        "scd2": (
+            "user_id long, ts_us long, event_id long, event_type string",
+            scd2_stateful,
+            lambda k, s, x: {
+                "user_id": 1 if k == "A" else 2,
+                "ts_us": s * 1_000_000,
+                "event_id": 10 * s + (k == "B"),
+                "event_type": "XY"[int(x) % 2],
+            },
+            "append", False,
+        ),
+        # key B is uncharted: its rows pass through with null scores
+        "cusum": (
+            val,
+            lambda st: cusum_per_key_stateful(
+                st, {"A": (11.5, 1.5)}, k_sigma=0.5, h_sigma=1.0
+            ),
+            val_row, "update", True,
+        ),
+        "drift": (
+            "grp string, value double",
+            lambda st: drift_monitor_stateful(
+                st, {"A": [2, 3, 1, 0]}, bucket_width=5.0, n_buckets=3
+            ),
+            lambda k, s, x: {"grp": k, "value": x},
+            "update", False,
+        ),
+    }
+
+
+def _restart_batches(row, poison: bool) -> list[list[dict]]:
+    """Three files of keys A and B: seqs 1-3 | 4-6 | 7-8. With
+    ``poison``, file 2 also replays seq 3 (file 1's last, the boundary
+    case) and repeats seq 5 after its first copy; the seq fold must
+    drop both."""
+    batches = [
+        [row(k, s, _x(k, s)) for k in "AB" for s in seqs]
+        for seqs in ([1, 2, 3], [4, 5, 6], [7, 8])
+    ]
+    if poison:
+        batches[1] += [row(k, s, 999.0) for s in (3, 5) for k in "AB"]
+    return batches
+
+
+def _run_restartable(spark, root, case, batches, stop_after=None):
+    """Feed ``batches`` as one JSON file per trigger through the
+    operator into an idempotent foreachBatch parquet sink (one
+    overwrite directory per batch id). With ``stop_after``, the first
+    query sees only that many files; the rest arrive after it stopped
+    and a NEW query resumes from the same checkpoint."""
+    import os
+    import time
+
+    schema, build, _, mode, _ = case
+    d, out = root / "in", root / "out"
+    d.mkdir(parents=True)
+    now = time.time()
+
+    def write(i):
+        f = d / f"b{i}.json"
+        f.write_text("\n".join(json.dumps(r) for r in batches[i]))
+        os.utime(f, (now + i, now + i))  # pin file-source pickup order
+
+    def sink(batch_df, batch_id):
+        batch_df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(d))
+        )
+        q = (
+            build(stream)
+            .writeStream.foreachBatch(sink)
+            .outputMode(mode)
+            .option("checkpointLocation", str(root / "cp"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+
+    first = stop_after or len(batches)
+    for i in range(first):
+        write(i)
+    drain()
+    for i in range(first, len(batches)):
+        write(i)
+    if first < len(batches):
+        drain()
+    return sorted(
+        (tuple(r) for r in spark.read.parquet(str(out)).collect()), key=repr
+    )
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["latest", "ewma", "rsi", "obv", "vwap", "heavy_hitters", "scd2",
+     "cusum", "drift"],
+)
+def test_stateful_restart_and_replay_differential(spark, tmp_path, name):
+    """Every stateful operator survives a stop and restart from its
+    checkpoint with output identical to an uninterrupted run, batch for
+    batch. For the seq folds, the second file also carries a replay of
+    a seq the first query already processed (so the replay crosses the
+    restart) and an in-batch duplicate seq; the output must equal a run
+    over the same input with those rows removed."""
+    case = _restart_cases()[name]
+    _, _, row, _, is_fold = case
+    batches = _restart_batches(row, poison=is_fold)
+    whole = _run_restartable(spark, tmp_path / "whole", case, batches)
+    restarted = _run_restartable(
+        spark, tmp_path / "restarted", case, batches, stop_after=1
+    )
+    assert {r[-1] for r in whole} == {0, 1, 2}  # every batch emitted
+    assert restarted == whole
+    if is_fold:
+        clean = _restart_batches(row, poison=False)
+        assert _run_restartable(spark, tmp_path / "clean", case, clean) == whole

@@ -196,3 +196,36 @@ def test_spread_gate_reads_scan_metadata(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)
+
+
+def test_scan_splits_reads_leaf_node_default_parallelism(spark, tmp_path):
+    """With ``spark.sql.files.minPartitionNum`` unset, Spark's
+    FilePartition.maxSplitBytes divides the scan by
+    ``spark.sql.leafNodeDefaultParallelism`` before it falls back to
+    ``defaultParallelism``; the metadata replica must do the same, or
+    its byte-split estimate drifts from the planned partition count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from market_analyze_data_stream_processing_spark.sources.tables import (
+        _scan_splits,
+    )
+
+    path = str(tmp_path / "many_rg.parquet")
+    tbl = pa.table({"v": pa.array(range(100_000), type=pa.int64())})
+    pq.write_table(tbl, path, row_group_size=4_000)  # 25 row groups
+    leaf = 2
+    assert leaf != spark.sparkContext.defaultParallelism
+    prev_oc = spark.conf.get("spark.sql.files.openCostInBytes")
+    try:
+        # zero open cost: the split size is totalBytes / leaf, not the
+        # 4 MB open-cost floor, so the parallelism conf decides it
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", str(leaf))
+        df = spark.read.parquet(path)
+        planned = df.rdd.getNumPartitions()
+        assert planned < 25  # the byte bound, not the row-group bound
+        assert _scan_splits(df) == planned
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+        spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)

@@ -16,16 +16,15 @@ different layouts:
      (many tiny scan splits, prime shuffle fan-in — maximally different
       accumulation orders for both scans and exchanges)
 
-and the normalized row multisets (verify_local's norm: 9 significant
-digits, order-insensitive) must be IDENTICAL. A query that differs is a
-latent driver hash flake.
+and the normalized row multisets (verify_local's ``norm_rows``:
+full-precision ``repr`` of every float, order-insensitive) must be
+IDENTICAL. A query that differs would flake a hash-exact comparison.
 
 Usage: python tools/stability_sweep.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
@@ -34,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
+from verify_local import norm_rows  # tools/ is sys.path[0] for a script
 
 LAYOUTS = {
     "A": {
@@ -47,27 +47,6 @@ LAYOUTS = {
         "spark.sql.files.openCostInBytes": "0",
     },
 }
-
-
-def norm_cell(v):
-    # full-precision (shortest round-trip repr) — byte-stability means
-    # bit-stability, same bar as the driver hash and verify_local
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0:
-            v = 0.0
-        return repr(v)
-    return str(v)
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort()
-    return out
 
 
 def run_layout(spark, fn, sf_dir, conf):
