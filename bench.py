@@ -16,6 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.calibration import (
     CALIB_REF_SEC,
     SCAN_REF_SEC,
@@ -47,13 +48,10 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     df.write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
     exec_m = None if floor is None else metrics_since(spark, floor + 1)
-    # The localCheckpoint-based queries (shingle base, CC iterations,
-    # jaccard inverted index) pin blocks in the block manager; across a
-    # 122-query session those accumulate into GC pressure that skews
-    # later measurements. Drop them once they're timed.
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(m.keySet().toArray()):
-        m.get(rid).unpersist()
+    # The pins a query leaves (its result's localCheckpoint blocks)
+    # accumulate across a session into GC pressure that skews later
+    # measurements. Drop them once they're timed.
+    unpin_all(spark)
     # The IVF index cache is a DRIVER-side dict, untouched by the RDD
     # unpersist above; left alone it would survive into the second timed
     # pass and q_ann_ivf's min-of-two would measure a cache hit, not a
@@ -61,6 +59,33 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     # but this bench promises full end-to-end plans).
     invalidate_ivf_index()
     return elapsed, exec_m
+
+
+def warm_up(spark, queries: dict) -> None:
+    """Start the Python worker pool and compile every plan of
+    ``queries`` once at sf0.001, so timed runs measure steady state.
+
+    The first Arrow-batched stage of a session spawns the worker pool;
+    without the warmup, whichever pandas-backed query runs first absorbs
+    that cost. Generated whole-stage-codegen classes are cached by plan
+    structure, which is identical across SFs (only the input path
+    differs), so one cheap sf0.001 pass compiles every plan: the timed
+    pass then measures steady-state latency (the number that matters on
+    a long-running cluster, where per-plan JIT amortizes to zero)
+    instead of charging each query its own one-time janino compile.
+    A warmup failure is the timed pass's error to report, so it is
+    ignored here."""
+    import pandas as _pd  # noqa: F401
+
+    spark.range(32).repartition(32).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    for q in queries.values():
+        try:
+            q.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass
+        unpin_all(spark)
 
 
 def probe_safe(fn, spark) -> float | None:
@@ -110,9 +135,17 @@ def select_queries(argv: list[str]) -> dict:
             (detail.get("queries_norm") or detail["queries"]).items(),
             key=lambda kv: -kv[1],
         )
-        # filter stale names BEFORE slicing so --top N times exactly N
-        # live queries even when the committed detail predates a rename
+        # Filter stale names BEFORE slicing, so a rename in the registry
+        # costs no slot. Queries registered after the detail was written
+        # are not ranked at all: say so, and say when fewer than N remain.
         live = [name for name, _ in ranked if name in QUERIES]
+        unranked = len(QUERIES) - len(live)
+        if len(live) < n or unranked:
+            print(
+                f"bench.py --top {n}: timing {min(n, len(live))} queries; "
+                f"{unranked} registered queries are not ranked in {detail_path}",
+                file=sys.stderr,
+            )
         return {name: QUERIES[name] for name in live[:n]}
     return dict(QUERIES)
 
@@ -125,32 +158,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Python-worker warmup: the first Arrow-batched stage of the session
-    # spawns the python worker pool (~seconds on local[32]); without
-    # this, whichever pandas-backed query runs first absorbs that cost.
-    import pandas as _pd  # noqa: F401
-
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # Whole-suite JIT/codegen warmup at the SMALLEST SF: generated
-    # wholestage-codegen classes are cached by plan structure, which is
-    # identical across SFs (only the input path differs), so one cheap
-    # sf0.001 pass compiles every plan in the suite. The timed pass then
-    # measures steady-state query latency — the number that matters on a
-    # long-running cluster, where per-plan JIT amortizes to zero —
-    # instead of charging each query its own one-time janino compile.
-    # Measured run-to-run variance on this host (Firecracker guest,
-    # invisible CPU steal) is larger than most queries' true cost; warm
-    # plans also shrink that attribution noise.
-    for _wname, _wq in queries.items():
-        try:
-            _wq.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # a warmup failure is the timed pass's error to report
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
+    warm_up(spark, queries)
 
     # Two full timed passes, min per query. On this host (Firecracker
     # guest) CPU steal is invisible and routinely adds 2-20 s spikes to

@@ -32,6 +32,18 @@ query rebuilds its index end to end, while the expression, probe and
 plan kinds stay warm. Clearing those too would re-pay several thousand
 Py4J round trips per ANN build, a cost the queries do not have in a
 long-lived session.
+
+Pin lifecycle. A ``localCheckpoint`` pin lives in the block manager
+until it is released. An operator releases the intermediates it pins
+with :func:`unpin`, before it returns or once its write is done; what
+it returns (and hands to its caller, who then owns it) may stay
+pinned. A harness releases the rest between queries with
+:func:`unpin_all`. :func:`unpin` goes through the pin's own RDD, the
+one under the frame's ``LogicalRDD``, never through an id diff of
+``getPersistentRDDs()`` around a call: registration is synchronous at
+the ``localCheckpoint`` call, but two queries of one session (the two
+sinks of a consumer cycle) pin at the same time, and a diff can catch
+the other query's pin.
 """
 
 from __future__ import annotations
@@ -107,3 +119,20 @@ def clear(*kinds: str) -> None:
     """Drop every entry of the given kinds."""
     for kind in kinds:
         _KINDS.pop(kind, None)
+
+
+def unpin(*frames) -> None:
+    """Release each frame's ``localCheckpoint`` pin through its own RDD.
+    A frame whose plan is not a ``LogicalRDD`` holds no pin: skipped."""
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+def unpin_all(spark) -> None:
+    """Release every persistent RDD of the session: the sweep a harness
+    runs between queries."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(m.keySet().toArray()):
+        m.get(rid).unpersist()

@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import unpin
 from ..functions.text import fingerprint, shingles, shingles_from_tokens, tokens
 
 
@@ -761,20 +762,14 @@ def connected_components(
     materialize-then-probe pair.
 
     Memory discipline: the pinned symmetrized set and every superseded
-    per-round labels checkpoint are RELEASED before returning; only the
+    per-round labels checkpoint are RELEASED before returning (through
+    ``cache.unpin``, so a caller's own pins are never touched); only the
     CONVERGED round's labels checkpoint — already materialized by that
     round's convergence aggregate, and what the returned frame reads —
     stays pinned (one |V|-row block set per call, exactly what an eager
     result re-checkpoint would pin, without spending a job on it).
     Without the cleanup, each call pinned a 2|E|-row cache plus one
-    |V|-row checkpoint per round for the session lifetime. Only the RDD
-    ids whose registration was observed immediately after THIS call's
-    own persist/checkpoint sites are released — a caller's own cached or
-    lazily-checkpointed frames are never swept, even if they first
-    materialize during CC's jobs. (localCheckpoint registration is
-    synchronous with the call — every pin CC creates is one — so the
-    only remaining caveat is a concurrent thread registering a cache in
-    the same instant; run CC serially with other cache-CREATING calls.)
+    |V|-row checkpoint per round for the session lifetime.
 
     Job count: symmetrization is a map-side ``explode`` of each edge
     into both directions — NOT ``union(e, e.reversed)``, which executes
@@ -786,55 +781,25 @@ def connected_components(
     job: the round-1 aggregate that fills the sym pin, builds the
     initial labels, checks the fixed point, and persists the result
     checkpoint."""
-    sc = edges.sparkSession.sparkContext
-
-    def _persistent_ids():
-        m = sc._jsc.getPersistentRDDs()
-        return {rid for rid in m.keySet().toArray()}
-
-    def _release(ids):
-        m = sc._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            if rid in ids:
-                m.get(rid).unpersist()
-
-    created: list[set[int]] = []
-
-    def _track(make):
-        """Run a persist/checkpoint-creating thunk and record exactly the
-        RDD ids it registered (registration is synchronous), one id-set
-        per call site so the converged round's checkpoint can be spared.
-        Returns (result, ids)."""
-        before = _persistent_ids()
-        out = make()
-        ids = _persistent_ids() - before
-        created.append(ids)
-        return out, ids
-
     # Pin the symmetrized set so pair generation runs once, not once per
     # round. No pre-repartition: under AQE the planner sees a pinned
     # frame's partitioning as unknown (cached-plan output partitioning
     # is hidden), so every round's join re-exchanges sym regardless — a
     # repartition here would be one extra 2|E| shuffle that buys
-    # nothing. A LAZY localCheckpoint (not persist) for two reasons: no
-    # job of its own (the round-1 aggregate materializes it), and —
-    # load-bearing for the release bookkeeping — localCheckpoint
-    # registers its RDD synchronously AT THE CALL, while
-    # DataFrame.persist registers only at first materialization
-    # (mid-round-1, where a site-diff would misattribute it to the
-    # round and a convergence at round 1 would pin the 2|E|-row block
-    # set for the session lifetime).
+    # nothing. A LAZY localCheckpoint (not persist): no job of its own
+    # (the round-1 aggregate materializes it).
     both_dirs = F.explode(
         F.array(
             F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
             F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
         )
     )
-    sym, _ = _track(
-        lambda: edges.select(both_dirs.alias("e"))
+    sym = (
+        edges.select(both_dirs.alias("e"))
         .select("e.u", "e.v")
         .localCheckpoint(eager=False)
     )
+    pins = [sym]
     # Initial labels = closed-neighborhood minimum: the same one-shuffle
     # groupBy a distinct() node list would cost, but it already performs
     # the first propagation — a pair/star/clique arrives at the loop
@@ -843,17 +808,20 @@ def connected_components(
         F.least(F.min("v"), F.first("u")).alias("comp")
     )
     try:
-        converged, keep = _cc_iterate(sym, labels, max_iter, _track)
-        # The converged round's checkpoint is already materialized (its
-        # convergence aggregate was the action); release everything else.
-        _release(set().union(*(s for s in created if s is not keep)))
-        return converged
+        converged = _cc_iterate(sym, labels, max_iter, pins)
     except Exception:
-        _release(set().union(*created) if created else set())
+        unpin(*pins)
         raise
+    # The converged round's checkpoint (the last pin) is already
+    # materialized (its convergence aggregate was the action) and is
+    # what the result reads; release everything else.
+    unpin(*pins[:-1])
+    return converged
 
 
-def _cc_iterate(sym, labels, max_iter, track):
+def _cc_iterate(sym, labels, max_iter, pins):
+    """Propagation rounds from ``labels`` to the fixed point; each
+    round's labels pin is appended to ``pins``."""
     for rnd in range(max_iter):
         # Carry each node's PREVIOUS label through the round as ``old``
         # (null on neighbor rows, so min() recovers it per node): the
@@ -906,18 +874,14 @@ def _cc_iterate(sym, labels, max_iter, track):
                 ).alias("comp"),
                 "old",
             )
-        labels, round_ids = track(
-            lambda: new_labels.localCheckpoint(eager=False)
-        )
+        labels = new_labels.localCheckpoint(eager=False)
+        pins.append(labels)
         # This aggregate is the ONLY action this round: it computes the
         # new labels, persists them via the lazy checkpoint, and returns
         # both convergence scalars in a single job.
         cur_sum, old_sum = labels.agg(F.sum("comp"), F.sum("old")).first()
         if cur_sum == old_sum:
-            return (
-                labels.select("node", F.col("comp").alias("component")),
-                round_ids,
-            )
+            return labels.select("node", F.col("comp").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations "
         "(component diameter > ~2^max_iter); truncated labels would be "

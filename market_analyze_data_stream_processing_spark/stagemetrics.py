@@ -56,6 +56,7 @@ FIELDS = (
     "shuffle_write_bytes",
     "tasks",
     "stages",
+    "stages_skipped",
 )
 
 
@@ -117,8 +118,9 @@ def metrics_since(spark: SparkSession, floor: int) -> dict | None:
     """Executor-metric totals over all stages with ``stageId >= floor``.
 
     Returns a dict with :data:`FIELDS` keys, or None on any error.
-    Skipped stages (reused exchange outputs) contribute zeros, which is
-    correct: the query did not re-execute them.
+    ``stages`` counts executed stages; a SKIPPED stage (a reused shuffle
+    output, no task run) is counted under ``stages_skipped`` and adds
+    nothing to the other totals.
     """
     try:
         seq = _stage_seq(spark)
@@ -131,10 +133,14 @@ def metrics_since(spark: SparkSession, floor: int) -> dict | None:
         sw_b = 0
         tasks = 0
         stages = 0
+        skipped = 0
         for i in range(seq.length()):
             s = seq.apply(i)
             if s.stageId() < floor:
                 break  # newest-first: everything after is older
+            if s.status().toString() == "SKIPPED":
+                skipped += 1
+                continue
             stages += 1
             cpu_ns += s.executorCpuTime()
             run_ms += s.executorRunTime()
@@ -154,6 +160,7 @@ def metrics_since(spark: SparkSession, floor: int) -> dict | None:
             "shuffle_write_bytes": sw_b,
             "tasks": tasks,
             "stages": stages,
+            "stages_skipped": skipped,
         }
     except Exception:
         return None

@@ -1,5 +1,5 @@
 from .heartbeat import HeartbeatListener, health_status
-from .ingest import bars_with_indicators, file_json_stream, kafka_topic_stream, split_by_topic
+from .ingest import file_json_stream, kafka_topic_stream, split_by_topic
 from .upsert import (
     keep_last_merge,
     retention_filter,
@@ -11,7 +11,6 @@ __all__ = [
     "kafka_topic_stream",
     "file_json_stream",
     "split_by_topic",
-    "bars_with_indicators",
     "keep_last_merge",
     "upsert_parquet",
     "stream_upsert_parquet",

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import unpin
 from ..operators.dedup import lsh_bands
 
 
@@ -46,6 +47,10 @@ def merge_near_dup_index(
     doc; ``matches`` = ``(new_id, existing_id)`` rejection evidence.
     Within-batch ties keep the lowest id (deterministic replay).
     Accepted docs' band keys are appended to the index before return.
+
+    ``matches`` is pinned (``accepted`` reads it): the caller owns the
+    pin and releases it with ``cache.unpin(matches)`` once done with
+    both frames. The band keys' pin is released before return.
     """
     id_type = batch.schema[id_col].dataType.simpleString()
     no_matches = spark.createDataFrame([], f"new_id {id_type}, existing_id {id_type}")
@@ -61,54 +66,57 @@ def merge_near_dup_index(
     # One materialization: probed, self-joined, and appended below. The
     # touched-bucket set rides the same job as an observed metric.
     bk = bk.localCheckpoint()
-    touched = seen.get["touched"]
-    if not touched:
-        # No band keys (an empty batch, or only docs too short to
-        # shingle): nothing can collide and nothing joins the index.
-        return batch, no_matches
+    try:
+        touched = seen.get["touched"]
+        if not touched:
+            # No band keys (an empty batch, or only docs too short to
+            # shingle): nothing can collide and nothing joins the index.
+            return batch, no_matches
 
-    # dup-vs-index: probe only touched buckets (partition-pruned scan)
-    if os.path.exists(index_path):
-        idx = spark.read.parquet(index_path).where(F.col("__bucket").isin(touched))
-        vs_index = (
-            bk.join(
-                idx.withColumnRenamed(id_col, "existing_id"),
-                ["band", "h", "__bucket"],
+        # dup-vs-index: probe only touched buckets (partition-pruned scan)
+        if os.path.exists(index_path):
+            idx = spark.read.parquet(index_path).where(F.col("__bucket").isin(touched))
+            vs_index = (
+                bk.join(
+                    idx.withColumnRenamed(id_col, "existing_id"),
+                    ["band", "h", "__bucket"],
+                )
+                .select(F.col(id_col).alias("new_id"), "existing_id")
             )
+        else:
+            vs_index = no_matches
+
+        # dup-within-batch: keep the lowest id of each colliding band group.
+        # Resolved with a per-group min AGGREGATE, not a pairwise self-join:
+        # a doc is rejected iff ANY lower id shares one of its bands, which
+        # is exactly "its id exceeds the group minimum", so the rejected set
+        # is identical — but the cost is O(batch band rows) where the pair
+        # join is O(sum of group sizes squared). A heavily-duplicated batch
+        # (the common case the dedup index exists FOR) makes band groups
+        # scale with batch size and the pair form blows up quadratically
+        # (1e9+ rows from a 100k-doc near-identical batch); the aggregate
+        # form's map-side combine never materializes more than one row per
+        # (band, h) per partition. Evidence rows point at the group winner.
+        grp_min = bk.groupBy("band", "h").agg(F.min(id_col).alias("existing_id"))
+        in_batch = (
+            bk.join(grp_min, ["band", "h"])
+            .where(F.col(id_col) > F.col("existing_id"))
             .select(F.col(id_col).alias("new_id"), "existing_id")
         )
-    else:
-        vs_index = no_matches
+        matches = vs_index.unionByName(in_batch).distinct().localCheckpoint()
 
-    # dup-within-batch: keep the lowest id of each colliding band group.
-    # Resolved with a per-group min AGGREGATE, not a pairwise self-join:
-    # a doc is rejected iff ANY lower id shares one of its bands, which
-    # is exactly "its id exceeds the group minimum", so the rejected set
-    # is identical — but the cost is O(batch band rows) where the pair
-    # join is O(sum of group sizes squared). A heavily-duplicated batch
-    # (the common case the dedup index exists FOR) makes band groups
-    # scale with batch size and the pair form blows up quadratically
-    # (1e9+ rows from a 100k-doc near-identical batch); the aggregate
-    # form's map-side combine never materializes more than one row per
-    # (band, h) per partition. Evidence rows point at the group winner.
-    grp_min = bk.groupBy("band", "h").agg(F.min(id_col).alias("existing_id"))
-    in_batch = (
-        bk.join(grp_min, ["band", "h"])
-        .where(F.col(id_col) > F.col("existing_id"))
-        .select(F.col(id_col).alias("new_id"), "existing_id")
-    )
-    matches = vs_index.unionByName(in_batch).distinct().localCheckpoint()
+        rejected = matches.select(F.col("new_id").alias(id_col)).distinct()
+        accepted = batch.join(rejected, id_col, "left_anti")
 
-    rejected = matches.select(F.col("new_id").alias(id_col)).distinct()
-    accepted = batch.join(rejected, id_col, "left_anti")
-
-    new_bands = bk.join(
-        rejected.withColumnRenamed(id_col, "__r"),
-        bk[id_col] == F.col("__r"),
-        "left_anti",
-    )
-    new_bands.write.mode("append").partitionBy("__bucket").parquet(index_path)
-    return accepted, matches
+        new_bands = bk.join(
+            rejected.withColumnRenamed(id_col, "__r"),
+            bk[id_col] == F.col("__r"),
+            "left_anti",
+        )
+        new_bands.write.mode("append").partitionBy("__bucket").parquet(index_path)
+        return accepted, matches
+    finally:
+        unpin(bk)
 
 
 def stream_near_dup_filter(
@@ -131,12 +139,15 @@ def stream_near_dup_filter(
         # Emptiness rides the merge's band-key job as an observed count:
         # an ``isEmpty()`` probe would be a job of its own.
         rows = Observation()
-        accepted, _ = merge_near_dup_index(
+        accepted, matches = merge_near_dup_index(
             spark, batch_df.observe(rows, F.count(F.lit(1)).alias("n")), index_path,
             id_col=id_col, text_col=text_col,
         )
-        if rows.get["n"]:
-            accepted.write.mode("append").parquet(out_path)
+        try:
+            if rows.get["n"]:
+                accepted.write.mode("append").parquet(out_path)
+        finally:
+            unpin(matches)
 
     writer = stream.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint

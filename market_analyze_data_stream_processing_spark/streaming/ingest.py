@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.analytics import with_lag_variation, with_moving_averages, with_trend
 from ..schemas import NEWS_DOC_SCHEMA, STOCK_HISTORY_SCHEMA
 
 #: Reference topic names (config.py:8-11).
@@ -104,15 +103,6 @@ def split_by_topic(raw: DataFrame) -> dict[str, DataFrame]:
         .select("topic", "v.*")
     )
     return {"history": history, "docs": docs}
-
-
-def bars_with_indicators(bars: DataFrame) -> DataFrame:
-    """The producer's in-loop analytics (A2/A3/A5) applied to a bar
-    frame — used by foreachBatch after the prices merge, proving the
-    operators are stream-agnostic."""
-    out = with_moving_averages(bars, value_col="Close", key="ticker", order="date")
-    out = with_lag_variation(out, value_col="Close", key="ticker", order="date")
-    return with_trend(out, value_col="Close", ma_col="ma50")
 
 
 def with_watermark_dedup(

@@ -132,7 +132,7 @@ def _make_latest_fn(ttl_ms: int | None):
             if int(row["seq"]) > best_seq:
                 best_seq = int(row["seq"])
                 best_value = float(row["value"])
-                best_payload = str(row["payload"])
+                best_payload = None if pd.isna(row["payload"]) else str(row["payload"])
                 changed = True
         if changed:
             state.update((best_seq, best_value, best_payload))
@@ -473,7 +473,10 @@ def heavy_hitters_stateful(
     (last_seq, n_seen) — O(k) however long the stream runs. Each
     trigger folds the new rows in seq order and emits the CURRENT
     summary (≤ k rows): a superset of every item whose running
-    frequency exceeds n_seen/(k+1). Batch parity: folding the same rows
+    frequency exceeds n_seen/(k+1). A trigger that cancels every
+    counter emits one marker row (``item`` null, ``lb`` 0, the current
+    ``n_seen``), so an update-mode consumer replaces the key's previous
+    watchlist instead of keeping it. Batch parity: folding the same rows
     in seq order through ``mg_update`` yields the identical summary
     (the state IS the sequential fold), pinned by
     tests/test_frequency.py."""
@@ -485,8 +488,9 @@ def heavy_hitters_stateful(
         mg_update(counters, pdf["item"], k)
         n_seen += len(pdf)
         items, counts = list(counters.keys()), [int(c) for c in counters.values()]
-        out = pd.DataFrame(
-            {"key": key[0], "item": items, "lb": counts, "n_seen": int(n_seen)}
+        out = pd.DataFrame(  # an emptied summary emits the marker row
+            {"key": key[0], "item": items or [None], "lb": counts or [0],
+             "n_seen": int(n_seen)}
         )
         return out, (int(pdf["seq"].iloc[-1]), int(n_seen), items, counts)
 

@@ -44,14 +44,8 @@ Nothing else runs a job:
   that was never read-merged, a silent loss — so the batch is pinned,
   lazily (``localCheckpoint(eager=False)`` runs no job): the
   touched-bucket scan fills the pin, and the write reads it. The batch,
-  pandas UDFs included, is computed once.
-
-Pin-release rule: a pin is released through its own RDD (the one under
-the pinned frame's ``LogicalRDD``, found by the frame, not by id
-lookup) as soon as the write has finished or failed — never by diffing
-``getPersistentRDDs()`` around the merge, because the two sinks of one
-consumer cycle merge at the same time and a diff can catch the other
-query's pin.
+  pandas UDFs included, is computed once. The pin is released with
+  ``cache.unpin`` as soon as the write has finished or failed.
 """
 
 from __future__ import annotations
@@ -65,6 +59,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
+from ..cache import unpin
 from ..operators.analytics import keep_last
 
 #: Footer key under which Spark's parquet writer stores the row schema.
@@ -173,7 +168,6 @@ def upsert_parquet(
     incoming = incoming.withColumn("__bucket", _bucket_expr(keys, n_buckets)).localCheckpoint(
         eager=False
     )
-    pin = incoming._jdf.queryExecution().analyzed().rdd()
     try:
         touched = _touched_buckets(incoming)
         if not touched:
@@ -201,7 +195,7 @@ def upsert_parquet(
             .parquet(path)
         )
     finally:
-        pin.unpersist(False)
+        unpin(incoming)
     # Dynamic overwrite only replaces the buckets present in the output,
     # each under new file names. A touched bucket whose every row was
     # retention-trimmed (the only way one can vanish: a keep-last merge

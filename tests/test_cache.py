@@ -86,3 +86,22 @@ def test_invalidate_ivf_index_clears_only_index_kinds(spark):
     invalidate_ivf_index()
     assert cache.tokens("ivf") == {} and cache.tokens("seed_cells") == {}
     assert all(key in cache.tokens(kind) for kind in kept)
+
+
+def test_unpin_releases_only_its_frames(spark):
+    """unpin releases each frame's own localCheckpoint pin and leaves
+    every other pin alone; a frame without a pin is skipped. unpin_all
+    releases the rest."""
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    mine = spark.range(10).localCheckpoint(eager=False)
+    theirs = spark.range(5).localCheckpoint()
+    assert len(persistent() - before) == 2
+    cache.unpin(mine, spark.range(3))
+    assert len(persistent() - before) == 1
+    assert theirs.count() == 5
+    cache.unpin_all(spark)
+    assert persistent() == set()

@@ -487,9 +487,8 @@ def test_connected_components_spares_caller_caches(spark):
     release that diffs getPersistentRDDs around the whole call would
     sweep it — leaving the caller's frame silently recomputing (or, for
     a checkpoint whose lineage was truncated, broken). CC must release
-    only the RDD ids its own persist/checkpoint sites registered
-    (registration is synchronous with the localCheckpoint() CALL, so
-    per-site snapshot diffing is exact)."""
+    only its own pins, each through its pinned frame's own RDD
+    (``cache.unpin``)."""
     from market_analyze_data_stream_processing_spark.operators.dedup import (
         connected_components,
     )
@@ -703,12 +702,17 @@ def test_incremental_near_dup_index_batches(spark, tmp_path):
 def test_stream_near_dup_filter_end_to_end(spark, tmp_path):
     """Streaming wrapper: file-replay source, availableNow trigger; the
     output table holds exactly the first-seen representative of each
-    near-dup group across micro-batches."""
+    near-dup group across micro-batches. Every micro-batch releases its
+    pins (band keys and matches): the set of persistent RDD ids after
+    the query is what it was before it."""
     import json
 
     from market_analyze_data_stream_processing_spark.streaming.dedup_index import (
         stream_near_dup_filter,
     )
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     src = tmp_path / "in"
     src.mkdir()
@@ -723,6 +727,7 @@ def test_stream_near_dup_filter_end_to_end(spark, tmp_path):
         )
     )
     stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+    before = persistent()
     q = stream_near_dup_filter(
         stream,
         index_path=str(tmp_path / "idx"),
@@ -731,6 +736,10 @@ def test_stream_near_dup_filter_end_to_end(spark, tmp_path):
         trigger_once=True,
     )
     q.awaitTermination(120)
+    assert q.exception() is None
+    # No pin of this query survives it. A subset, not equality: Spark's
+    # ContextCleaner may release an earlier test's abandoned pin meanwhile.
+    assert persistent() <= before
     got = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "out")).collect()}
     assert got == {0, 1}
 

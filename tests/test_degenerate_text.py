@@ -16,6 +16,7 @@ import inspect
 
 import pytest
 
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 
 
@@ -64,7 +65,5 @@ def test_text_family_is_total_on_degenerate_docs(spark, degenerate_sf_dir):
             QUERIES[name].fn(spark, degenerate_sf_dir).count()
         except Exception as e:  # noqa: BLE001 - recording, not handling
             fails.append(f"{name}: {str(e).splitlines()[0][:100]}")
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
+        unpin_all(spark)
     assert not fails, "queries crash on degenerate text:\n" + "\n".join(fails)

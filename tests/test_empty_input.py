@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pytest
 
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 
 TABLES = (
@@ -43,7 +44,5 @@ def test_every_query_is_total_on_empty_tables(spark, empty_sf_dir):
             fails.append(f"{name}: {str(e).splitlines()[0][:100]}")
         # Drop checkpoint blocks some queries pin (shingle bases, CC
         # labels) so the sweep doesn't accumulate cached empties.
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
+        unpin_all(spark)
     assert not fails, "queries crash on empty input:\n" + "\n".join(fails)

@@ -61,6 +61,44 @@ def test_metrics_bracket_one_query(spark):
     assert all(v == 0 for v in empty.values())
 
 
+def test_skipped_stages_are_counted_apart(spark):
+    """An RDD counted twice reuses its shuffle output: the second job's
+    map stage is SKIPPED, counted under stages_skipped, not stages."""
+    rdd = (
+        spark.sparkContext.parallelize(range(100), 2)
+        .map(lambda x: (x % 3, 1))
+        .reduceByKey(lambda a, b: a + b)
+    )
+    floor = max_stage_id(spark)
+    rdd.count()
+    first = metrics_since(spark, floor + 1)
+    assert (first["stages"], first["stages_skipped"]) == (2, 0)
+    floor = max_stage_id(spark)
+    rdd.count()
+    second = metrics_since(spark, floor + 1)
+    assert (second["stages"], second["stages_skipped"]) == (1, 1)
+    assert second["tasks"] == 2  # the reduce stage's tasks only
+
+
+def test_bench_top_warns_when_it_times_fewer(monkeypatch, capsys):
+    """--top N says on stderr when it cannot time N ranked queries, or
+    when a registered query is missing from BENCH_DETAIL.json's ranking
+    (it could never be picked)."""
+    import bench
+
+    names = list(bench.select_queries(["--top", "3"]))
+    capsys.readouterr()
+    # a registry of three ranked queries: every one of them is ranked
+    monkeypatch.setattr(bench, "QUERIES", {n: bench.QUERIES[n] for n in names})
+    assert list(bench.select_queries(["--top", "2"])) == names[:2]
+    assert capsys.readouterr().err == ""
+    assert list(bench.select_queries(["--top", "5"])) == names
+    assert "timing 3 queries" in capsys.readouterr().err
+    monkeypatch.setitem(bench.QUERIES, "q_registered_later", bench.QUERIES[names[0]])
+    assert list(bench.select_queries(["--top", "3"])) == names
+    assert "1 registered queries are not ranked" in capsys.readouterr().err
+
+
 def test_bench_probe_failure_degrades_to_raw_only():
     """ADVICE round-13: a probe-station failure (missing corpus, probe
     bug) must yield null calib fields and factor-1.0 normalization,

@@ -195,3 +195,44 @@ def test_cusum_carries_score_over_valueless_ticks(spark, tmp_path):
     assert out[2]["cusum_up"] == 1.5  # carried, value NULL, no crash
     assert out[2]["value"] is None
     assert out[3]["cusum_up"] == 3.0
+
+
+def test_latest_keeps_a_null_payload_null(spark, tmp_path):
+    """A null payload is stored and emitted as null, not as the string
+    'None' a reader could not tell from real text."""
+    from market_analyze_data_stream_processing_spark.streaming.stateful import (
+        latest_per_key_stateful,
+    )
+
+    schema = StructType(
+        [*VAL_SCHEMA.fields, StructField("payload", StringType())]
+    )
+    rows = _run_stream(
+        spark, tmp_path, latest_per_key_stateful,
+        [{"key": "A", "seq": 1, "value": 1.0, "payload": None}],
+        schema, "latest_null_payload",
+    )
+    assert [(r["key"], r["seq"], r["payload"]) for r in rows] == [("A", 1, None)]
+
+
+def test_heavy_hitters_emits_the_emptied_summary(spark, tmp_path):
+    """k=2 over three distinct items cancels every Misra-Gries counter:
+    the trigger still emits one marker row (item null, lb 0, the current
+    n_seen), so an update-mode consumer drops the key's old watchlist."""
+    from market_analyze_data_stream_processing_spark.streaming.stateful import (
+        heavy_hitters_stateful,
+    )
+
+    schema = StructType(
+        [
+            StructField("key", StringType()),
+            StructField("seq", LongType()),
+            StructField("item", StringType()),
+        ]
+    )
+    rows = _run_stream(
+        spark, tmp_path, lambda s: heavy_hitters_stateful(s, k=2),
+        [{"key": "K", "seq": s, "item": it} for s, it in enumerate("abc", 1)],
+        schema, "mg_emptied",
+    )
+    assert [tuple(r) for r in rows] == [("K", None, 0, 3)]

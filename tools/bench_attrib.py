@@ -85,10 +85,11 @@ def classify(
         signals.append("cpu")
     if abs(bytes_d) > 0.10:
         signals.append("bytes")
-    # stage counts are PRINTED but not a signal: the count includes
-    # SKIPPED (exchange-reuse) stages, whose number varies run-to-run
-    # under AQE on identical plans — a real plan-shape change moves
-    # bytes or cpu too.
+    # stage counts are PRINTED but not a signal: artifacts written
+    # before ``stages_skipped`` existed count SKIPPED (exchange-reuse)
+    # stages in ``stages``, and their number varies run-to-run under AQE
+    # on identical plans — a real plan-shape change moves bytes or cpu
+    # too.
     if abs(gc_d_ms) > 0.5 * abs(run_d_ms) and abs(gc_d_ms) > 200:
         signals.append("gc")
     if not signals:
@@ -152,7 +153,8 @@ def main() -> None:
             f"gc_ms {mo['gc_ms']:5d}->{mn['gc_ms']:5d}  "
             f"in+shuf_mb {(mo['input_bytes'] + mo['shuffle_read_bytes']) / 1e6:8.1f}"
             f"->{(mn['input_bytes'] + mn['shuffle_read_bytes']) / 1e6:8.1f}  "
-            f"stages {mo['stages']}->{mn['stages']}"
+            f"stages {mo['stages']}->{mn['stages']} "
+            f"(skipped {mo.get('stages_skipped', '?')}->{mn.get('stages_skipped', '?')})"
         )
     for name, wo, wn in wall_only:
         print(f"wall-only {name:28s} {wo:6.2f}->{wn:6.2f} (no exec metrics on one side)")

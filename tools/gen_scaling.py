@@ -14,6 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import run_one
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
 
@@ -84,24 +85,9 @@ def main() -> None:
     have_sf1 = os.path.isdir(SF1_DIR)
     dirs = [f"/root/testdata/{sf}" for sf in SFS] + ([SF1_DIR] if have_sf1 else [])
 
-    def drop_persisted():
-        # iterative queries (CC, pagerank) pin localCheckpoints; release
-        # between queries so the sf1 passes don't accumulate blocks
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
-
-    rows = []
-    for name in HEADLINE:
-        times = []
-        for d in dirs:
-            t0 = time.perf_counter()
-            QUERIES[name].fn(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(time.perf_counter() - t0)
-            drop_persisted()
-        rows.append((name, times))
+    # bench.run_one: noop sink, then the pins and the IVF index dropped
+    rows = [(name, [run_one(spark, QUERIES[name], d)[0] for d in dirs])
+            for name in HEADLINE]
 
     rng = "1000×" if have_sf1 else "100×"
     hdr_sf1 = " sf1 |" if have_sf1 else ""
@@ -187,16 +173,11 @@ def main() -> None:
     out.append("")
 
     # ---- exact-Jaccard vs LSH-banding crossover (near-dup dedup) ----
-    xrows = []
-    for sf in SFS:
-        ts = []
-        for name in ("q_near_dup_jaccard", "q_lsh_band_candidates"):
-            t0 = time.perf_counter()
-            QUERIES[name].fn(spark, f"/root/testdata/{sf}").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(time.perf_counter() - t0)
-        xrows.append((sf, ts))
+    xrows = [
+        (sf, [run_one(spark, QUERIES[name], d)[0]
+              for name in ("q_near_dup_jaccard", "q_lsh_band_candidates")])
+        for sf, d in zip(SFS, dirs)
+    ]
     out += [
         "## Exact-Jaccard vs LSH-banding crossover (near-dup dedup)",
         "",

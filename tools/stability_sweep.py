@@ -31,6 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
 from verify_local import norm_rows  # tools/ is sys.path[0] for a script
@@ -68,11 +69,6 @@ def main() -> int:
         k: spark.conf.get(k, None) for k in LAYOUTS["A"]
     }
 
-    def drop_checkpoints():
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
-
     n_pass = n_fail = 0
     for name, q in QUERIES.items():
         if only and name not in only:
@@ -80,9 +76,9 @@ def main() -> int:
         t0 = time.time()
         try:
             cols_a, rows_a = run_layout(spark, q.fn, sf_dir, LAYOUTS["A"])
-            drop_checkpoints()
+            unpin_all(spark)
             cols_b, rows_b = run_layout(spark, q.fn, sf_dir, LAYOUTS["B"])
-            drop_checkpoints()
+            unpin_all(spark)
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {name}: {type(e).__name__}: {str(e)[:200]}")
             n_fail += 1

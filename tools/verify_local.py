@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
 
@@ -74,13 +75,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    def drop_checkpoints():
-        # localCheckpoint blocks accumulate across the 122-query session
-        # (shingle bases, CC iterations); unpersist after each query.
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
-
     n_pass = n_fail = n_rowsonly = 0
     for name, q in QUERIES.items():
         if only and name not in only:
@@ -95,7 +89,7 @@ def main():
             n_fail += 1
             continue
         finally:
-            drop_checkpoints()
+            unpin_all(spark)
         if q.oracle is None:
             print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             n_rowsonly += 1

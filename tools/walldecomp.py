@@ -29,6 +29,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_up
+from market_analyze_data_stream_processing_spark.cache import unpin_all
 from market_analyze_data_stream_processing_spark.operators.similarity import (
     invalidate_ivf_index,
 )
@@ -50,27 +52,9 @@ def main() -> None:
     spark = get_spark("walldecomp")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import pandas as _pd  # noqa: F401
-
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def drop_persisted():
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist()
-
-    # Same codegen warmup as bench.py so `execute` measures steady state.
-    for name in names:
-        try:
-            QUERIES[name].fn(spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception:
-            pass
-        drop_persisted()
-        invalidate_ivf_index()
+    # Same warmup as bench.py so `execute` measures steady state.
+    warm_up(spark, {name: QUERIES[name] for name in names})
+    invalidate_ivf_index()
 
     out: dict[str, dict] = {}
     for name in names:
@@ -104,7 +88,7 @@ def main() -> None:
             "exec_overhead": round((t4 - t3) - run_ms / 1e3 / cores, 3),
         }
         out[name] = rec
-        drop_persisted()
+        unpin_all(spark)
         invalidate_ivf_index()
 
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "walldecomp_out.json")
