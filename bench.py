@@ -30,7 +30,8 @@ from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
 from market_analyze_data_stream_processing_spark.stagemetrics import (
     max_stage_id,
-    metrics_since,
+    stage_records,
+    totals,
 )
 
 
@@ -41,13 +42,35 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     query's stages by stage-id floor and runs strictly OUTSIDE the
     timed window; it returns None instead of raising, so the metric
     read can never fail or skew the measurement.
+
+    The metrics also split the wall into layers: ``build_s`` (``q.fn``)
+    plus ``execute_s`` (the noop write) is the wall; ``build_stages``
+    and ``build_run_ms`` count the executed stages submitted before the
+    build ended (pins, driver collects); ``driver_s`` is ``execute_s``
+    less the execute stages' run time spread over the session's cores.
     """
     floor = max_stage_id(spark)
     t0 = time.perf_counter()
     df = q.fn(spark, sf_dir)
+    built, build_end_ms = time.perf_counter(), time.time() * 1e3
     df.write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
-    exec_m = None if floor is None else metrics_since(spark, floor + 1)
+    records = None if floor is None else stage_records(spark, floor + 1)
+    exec_m = None
+    if records is not None:
+        exec_m = totals(records)
+        build = totals([r for r in records if r["submitted_ms"] < build_end_ms])
+        build_s = round(built - t0, 3)
+        execute_s = round(round(elapsed, 3) - build_s, 3)
+        execute_run_s = (exec_m["run_ms"] - build["run_ms"]) / 1e3
+        cores = spark.sparkContext.defaultParallelism
+        exec_m.update(
+            build_s=build_s,
+            execute_s=execute_s,
+            build_stages=build["stages"],
+            build_run_ms=build["run_ms"],
+            driver_s=round(execute_s - execute_run_s / cores, 3),
+        )
     # The pins a query leaves (its result's localCheckpoint blocks)
     # accumulate across a session into GC pressure that skews later
     # measurements. Drop them once they're timed.
@@ -240,6 +263,12 @@ def main() -> None:
         "sr_gb": round(sum(m["shuffle_read_bytes"] for m in with_exec) / 1e9, 2),
         "n": len(with_exec),
     }
+    # The suite's layers: build plus execute is the wall, driver_s the
+    # execute share the executors do not account for.
+    layers = {
+        k: round(sum(m[k] for m in with_exec), 3)
+        for k in ("build_s", "build_stages", "build_run_ms", "execute_s", "driver_s")
+    }
     # Full-precision detail goes to a side file; the stdout line must stay
     # SHORT (driver captures only a bounded tail of stdout — round 1's
     # 3.7k-char line was truncated mid-line and failed to parse).
@@ -255,11 +284,14 @@ def main() -> None:
                 "queries": times,
                 "queries_norm": times_norm,
                 # Per-query executor totals (cpu_ms/run_ms/gc_ms/
-                # input/output/shuffle bytes/tasks/stages) for the kept
-                # execution: host steal reads as wall >> run/cpu with
-                # flat bytes; a plan regression moves cpu and/or bytes.
+                # input/output/shuffle bytes/tasks/stages) and layers
+                # (run_one) for the kept execution: host steal reads as
+                # wall >> run/cpu with flat bytes; a plan regression
+                # moves cpu and/or bytes.
                 "exec": exec_detail,
                 "exec_totals": exec_totals,
+                "layers": layers,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "calib": {
                     "pre": calib[0],
                     "mid": calib[1],

@@ -8,7 +8,9 @@ a manual diff-audit.  This module ends that: after every timed query,
 the bench reads the executor-side totals of exactly that query's stages
 — executorCpuTime, executorRunTime, jvmGcTime, input/output bytes,
 shuffle read/write bytes, task count — and records them in
-BENCH_DETAIL.json.
+BENCH_DETAIL.json.  Each stage's submission time splits those stages
+into the jobs the plan build ran (pins, driver collects) and the ones
+the execution ran.
 
 Attribution then becomes a measurement instead of an inference:
 
@@ -26,7 +28,7 @@ Implementation notes (pinned by tests/test_stagemetrics.py):
   this works on the bench session, which disables the UI.
 - ``stageList`` returns stages NEWEST-FIRST (the KVStore stageId index
   read in reverse).  ``max_stage_id`` is therefore O(1) and
-  ``metrics_since`` stops at the first stage below its floor — per-call
+  ``stage_records`` stops at the first stage below its floor — per-call
   Py4J cost is proportional to the QUERY's stage count, not the
   retained-stage cap.  Both run strictly OUTSIDE the timed window.
 - Stage ids are globally monotone within a SparkContext, so
@@ -114,53 +116,54 @@ def max_stage_id(spark: SparkSession) -> int | None:
         return None
 
 
-def metrics_since(spark: SparkSession, floor: int) -> dict | None:
-    """Executor-metric totals over all stages with ``stageId >= floor``.
+#: The v1.StageData getter behind each executor-side :data:`FIELDS` value.
+_GETTERS = {
+    "cpu_ms": "executorCpuTime",
+    "run_ms": "executorRunTime",
+    "gc_ms": "jvmGcTime",
+    "input_bytes": "inputBytes",
+    "output_bytes": "outputBytes",
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "tasks": "numCompleteTasks",
+}
 
-    Returns a dict with :data:`FIELDS` keys, or None on any error.
-    ``stages`` counts executed stages; a SKIPPED stage (a reused shuffle
-    output, no task run) is counted under ``stages_skipped`` and adds
-    nothing to the other totals.
+
+def stage_records(spark: SparkSession, floor: int) -> list[dict] | None:
+    """One record per stage with ``stageId >= floor``, newest first;
+    None on any error.
+
+    A record holds ``submitted_ms`` (epoch ms, the clock of
+    ``time.time()``; ``inf`` for a SKIPPED stage, which is never
+    submitted) and the :data:`FIELDS` values. ``stages_skipped`` is the
+    skipped flag: 1 for a SKIPPED stage (a reused shuffle output, no
+    task run), whose other values are all 0, and ``stages`` is 1 for an
+    executed one.
     """
     try:
         seq = _stage_seq(spark)
-        cpu_ns = 0
-        run_ms = 0
-        gc_ms = 0
-        in_b = 0
-        out_b = 0
-        sr_b = 0
-        sw_b = 0
-        tasks = 0
-        stages = 0
-        skipped = 0
+        out = []
         for i in range(seq.length()):
             s = seq.apply(i)
             if s.stageId() < floor:
                 break  # newest-first: everything after is older
-            if s.status().toString() == "SKIPPED":
-                skipped += 1
-                continue
-            stages += 1
-            cpu_ns += s.executorCpuTime()
-            run_ms += s.executorRunTime()
-            gc_ms += s.jvmGcTime()
-            in_b += s.inputBytes()
-            out_b += s.outputBytes()
-            sr_b += s.shuffleReadBytes()
-            sw_b += s.shuffleWriteBytes()
-            tasks += s.numCompleteTasks()
-        return {
-            "cpu_ms": round(cpu_ns / 1e6, 1),
-            "run_ms": run_ms,
-            "gc_ms": gc_ms,
-            "input_bytes": in_b,
-            "output_bytes": out_b,
-            "shuffle_read_bytes": sr_b,
-            "shuffle_write_bytes": sw_b,
-            "tasks": tasks,
-            "stages": stages,
-            "stages_skipped": skipped,
-        }
+            skipped = s.status().toString() == "SKIPPED"
+            rec = {f: 0 if skipped else getattr(s, g)() for f, g in _GETTERS.items()}
+            rec["cpu_ms"] /= 1e6  # the store keeps nanoseconds
+            sub = s.submissionTime()
+            rec.update(
+                submitted_ms=sub.get().getTime() if sub.isDefined() else float("inf"),
+                stages=int(not skipped),
+                stages_skipped=int(skipped),
+            )
+            out.append(rec)
+        return out
     except Exception:
         return None
+
+
+def totals(records: list[dict]) -> dict:
+    """The :data:`FIELDS` sums over ``records`` (all zeros for none)."""
+    out = {f: sum(r[f] for r in records) for f in FIELDS}
+    out["cpu_ms"] = round(out["cpu_ms"], 1)
+    return out

@@ -3,11 +3,12 @@
 - AppStatusStore is populated with spark.ui.enabled=false (the test
   session disables the UI, like the bench session);
 - stageList returns stages NEWEST-FIRST (strictly descending stageId),
-  which is what makes max_stage_id O(1) and the metrics_since
+  which is what makes max_stage_id O(1) and the stage_records
   break-at-floor sound;
 - the [floor, now] bracket attributes exactly one query's stages:
   a parquet scan + shuffle shows input and shuffle bytes, CPU time,
-  and completed tasks; an empty bracket shows all-zero totals.
+  and completed tasks; an empty bracket shows all-zero totals;
+- bench.run_one splits a query's wall at the end of its plan build.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ import os
 from market_analyze_data_stream_processing_spark.stagemetrics import (
     FIELDS,
     max_stage_id,
-    metrics_since,
+    stage_records,
+    totals,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -47,7 +49,7 @@ def test_metrics_bracket_one_query(spark):
         .count()
     )
     df.write.format("noop").mode("overwrite").save()
-    m = metrics_since(spark, floor_before + 1)
+    m = totals(stage_records(spark, floor_before + 1))
     assert m is not None and set(m) == set(FIELDS)
     assert m["stages"] >= 2, "scan + shuffled aggregate = at least 2 stages"
     assert m["tasks"] >= 2
@@ -56,7 +58,7 @@ def test_metrics_bracket_one_query(spark):
     assert m["cpu_ms"] > 0 and m["run_ms"] > 0
     assert m["gc_ms"] >= 0
     # an empty bracket — nothing ran since the snapshot — is all zeros
-    empty = metrics_since(spark, max_stage_id(spark) + 1)
+    empty = totals(stage_records(spark, max_stage_id(spark) + 1))
     assert empty is not None
     assert all(v == 0 for v in empty.values())
 
@@ -71,13 +73,40 @@ def test_skipped_stages_are_counted_apart(spark):
     )
     floor = max_stage_id(spark)
     rdd.count()
-    first = metrics_since(spark, floor + 1)
+    first = totals(stage_records(spark, floor + 1))
     assert (first["stages"], first["stages_skipped"]) == (2, 0)
     floor = max_stage_id(spark)
     rdd.count()
-    second = metrics_since(spark, floor + 1)
+    second = totals(stage_records(spark, floor + 1))
     assert (second["stages"], second["stages_skipped"]) == (1, 1)
     assert second["tasks"] == 2  # the reduce stage's tasks only
+
+
+def test_run_one_splits_the_wall_at_build_end(spark):
+    """An eager pin inside ``fn`` runs its stages during the build; the
+    noop write of the lazy aggregate ``fn`` returns runs the execute
+    stages; build plus execute is the wall. A query that stays lazy
+    until the write builds no stage."""
+    import bench
+    from market_analyze_data_stream_processing_spark.plans.registry import Query
+
+    def lineitem(spark, sf_dir):
+        return spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+
+    def pinned(spark, sf_dir):
+        return lineitem(spark, sf_dir).localCheckpoint(eager=True).groupBy("l_returnflag").count()
+
+    def lazy(spark, sf_dir):  # no parquet read: its schema inference is a job
+        return spark.range(1000).selectExpr("id % 3 k").groupBy("k").count()
+
+    wall, m = bench.run_one(spark, Query("pinned", pinned, None), SF)
+    assert m["build_stages"] >= 1 and 0 < m["build_run_ms"] <= m["run_ms"]
+    assert m["stages"] > m["build_stages"], "the write runs at least one stage"
+    assert abs(m["build_s"] + m["execute_s"] - wall) <= 1e-3
+    assert m["driver_s"] <= m["execute_s"]
+    wall, m = bench.run_one(spark, Query("lazy", lazy, None), SF)
+    assert (m["build_stages"], m["build_run_ms"]) == (0, 0) and m["stages"] >= 1
+    assert abs(m["build_s"] + m["execute_s"] - wall) <= 1e-3
 
 
 def test_bench_top_warns_when_it_times_fewer(monkeypatch, capsys):

@@ -342,9 +342,10 @@ def test_upsert_releases_its_pin(spark, tmp_path):
     and the write read the same rows even when a second evaluation
     would differ (here a random key), and the pin is released
     afterwards: after three merges — direct, or as ``foreachBatch``
-    micro-batches — the set of persistent RDD ids is what it was before
-    them. The released pins still did their job: every key is stored
-    once, with its latest value."""
+    micro-batches — no persistent RDD id they created survives. A
+    subset, not equality: Spark's ContextCleaner may release an earlier
+    test's abandoned pin meanwhile. The released pins still did their
+    job: every key is stored once, with its latest value."""
     sc = spark.sparkContext
 
     def persistent():
@@ -362,7 +363,7 @@ def test_upsert_releases_its_pin(spark, tmp_path):
     before = persistent()
     for seed in range(3):
         upsert_parquet(spark, batch(seed), path, keys=["k"], order=["seq"], n_buckets=4)
-    assert persistent() == before
+    assert persistent() <= before
     keys = [r["k"] for r in spark.read.parquet(path).collect()]
     assert len(keys) == len(set(keys))
 
@@ -384,7 +385,7 @@ def test_upsert_releases_its_pin(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert q.exception() is None and len(q.recentProgress) == 3
-    assert persistent() == before
+    assert persistent() <= before
     got = {r["k"]: r["v"] for r in spark.read.parquet(str(tmp_path / "s")).collect()}
     assert got == {"A": 20.0, "B": 21.0, "C0": 2.0, "C1": 12.0, "C2": 22.0}
 

@@ -35,9 +35,11 @@ Usage:
 
 Output: one line per classified query plus a suite summary with the
 count per class, the wall-delta mass each class carries, and the
-suite-median host CPU factor used. Queries missing exec metrics on
-either side fall back to `wall-only` (the pre-round-14 situation) and
-are listed, not classified.
+suite-median host CPU factor used, then each artifact's suite layers
+(build, build-time stages and run time, execute, driver; ``n/a`` for an
+artifact written before ``bench.py`` recorded them). Queries missing
+exec metrics on either side fall back to `wall-only` (the pre-round-14
+situation) and are listed, not classified.
 """
 
 from __future__ import annotations
@@ -173,6 +175,12 @@ def main() -> None:
     if wall_only:
         mass = sum(wn - wo for _n, wo, wn in wall_only)
         print(f"  wall-only: {len(wall_only)} queries, {mass:+.1f}s (unclassifiable)")
+    for side, art in (("old", old), ("new", new)):
+        lay = art.get("layers")
+        print(
+            f"layers {side} (cpus {art.get('cpus', 'n/a')}): "
+            + (" ".join(f"{k} {v}" for k, v in lay.items()) if lay else "n/a")
+        )
 
 
 if __name__ == "__main__":

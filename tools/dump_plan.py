@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
+from market_analyze_data_stream_processing_spark.sources.storage import explain_string
 
 
 def main() -> None:
@@ -26,10 +27,7 @@ def main() -> None:
     spark = get_spark("dump_plan")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = QUERIES[name].fn(spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        txt = explain_string(QUERIES[name].fn(spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)

@@ -14,7 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import run_one
+from bench import run_one, warm_up
 from market_analyze_data_stream_processing_spark.plans import QUERIES
 from market_analyze_data_stream_processing_spark.session import get_spark
 
@@ -77,10 +77,8 @@ SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1")
 def main() -> None:
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup
-    QUERIES["q01_pricing_summary"].fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    cores = spark.sparkContext.defaultParallelism
+    warm_up(spark, {n: QUERIES[n] for n in HEADLINE})
 
     have_sf1 = os.path.isdir(SF1_DIR)
     dirs = [f"/root/testdata/{sf}" for sf in SFS] + ([SF1_DIR] if have_sf1 else [])
@@ -94,7 +92,7 @@ def main() -> None:
     out = [
         f"# SCALING — headline queries across a {rng} data range",
         "",
-        "Wall-clock seconds on local[32] (warm JVM), forced end-to-end via",
+        f"Wall-clock seconds on local[{cores}] (warm JVM), forced end-to-end via",
         "noop writes. 100× more rows costing far less than 100× more time",
         "means fixed overhead still dominates at these SFs — the plan-cost",
         "component (the part that matters at 100 TB) grows sub-linearly to",
@@ -562,7 +560,7 @@ def main() -> None:
     out.append("## Streaming soak (rate source → watermark → 1 s tumbling agg)")
     out.append("")
     out.append(
-        f"Peak micro-batch throughput {peak:,.0f} rows/s on local[32] "
+        f"Peak micro-batch throughput {peak:,.0f} rows/s on local[{cores}] "
         "(500 K rows/s offered; watermarked update-mode aggregation with "
         "16-way keys). The stateful agg shuffles once on (window, key) and "
         "state is bounded by the watermark horizon — the same plan scales "
