@@ -46,8 +46,12 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     The metrics also split the wall into layers: ``build_s`` (``q.fn``)
     plus ``execute_s`` (the noop write) is the wall; ``build_stages``
     and ``build_run_ms`` count the executed stages submitted before the
-    build ended (pins, driver collects); ``driver_s`` is ``execute_s``
-    less the execute stages' run time spread over the session's cores.
+    build ended (pins, driver collects). ``execute_s`` is ``stage_s``,
+    the time at least one execute stage was running (the union of their
+    submitted-to-completed intervals), plus ``driver_s``, the gaps
+    between them. ``idle_core_s`` is ``stage_s`` less the execute
+    stages' run time spread over the session's cores: the core time
+    the stages left unused, such as a one-task stage on many cores.
     """
     floor = max_stage_id(spark)
     t0 = time.perf_counter()
@@ -55,6 +59,7 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     built, build_end_ms = time.perf_counter(), time.time() * 1e3
     df.write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
+    end_ms = time.time() * 1e3
     records = None if floor is None else stage_records(spark, floor + 1)
     exec_m = None
     if records is not None:
@@ -64,12 +69,19 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
         execute_s = round(round(elapsed, 3) - build_s, 3)
         execute_run_s = (exec_m["run_ms"] - build["run_ms"]) / 1e3
         cores = spark.sparkContext.defaultParallelism
+        stage_s = round(_covered_s(
+            [(r["submitted_ms"], r["completed_ms"]) for r in records
+             if r["stages"] and r["submitted_ms"] >= build_end_ms],
+            build_end_ms, end_ms,
+        ), 3)
         exec_m.update(
             build_s=build_s,
             execute_s=execute_s,
             build_stages=build["stages"],
             build_run_ms=build["run_ms"],
-            driver_s=round(execute_s - execute_run_s / cores, 3),
+            stage_s=stage_s,
+            driver_s=round(execute_s - stage_s, 3),
+            idle_core_s=round(stage_s - execute_run_s / cores, 3),
         )
     # The pins a query leaves (its result's localCheckpoint blocks)
     # accumulate across a session into GC pressure that skews later
@@ -82,6 +94,18 @@ def run_one(spark, q, sf_dir: str) -> tuple[float, dict | None]:
     # but this bench promises full end-to-end plans).
     invalidate_ivf_index()
     return elapsed, exec_m
+
+
+def _covered_s(intervals: list[tuple[float, float]], lo: float, hi: float) -> float:
+    """Seconds of ``[lo, hi]`` (epoch ms) covered by the union of the
+    ``(start, end)`` ms intervals."""
+    covered, reach = 0.0, lo
+    for start, end in sorted(intervals):
+        start, end = max(start, reach), min(end, hi)
+        if end > start:
+            covered += end - start
+            reach = end
+    return covered / 1e3
 
 
 def warm_up(spark, queries: dict) -> None:
@@ -263,11 +287,14 @@ def main() -> None:
         "sr_gb": round(sum(m["shuffle_read_bytes"] for m in with_exec) / 1e9, 2),
         "n": len(with_exec),
     }
-    # The suite's layers: build plus execute is the wall, driver_s the
-    # execute share the executors do not account for.
+    # The suite's layers: build plus execute is the wall, and execute is
+    # stage time plus the driver's gaps between stages (run_one).
     layers = {
         k: round(sum(m[k] for m in with_exec), 3)
-        for k in ("build_s", "build_stages", "build_run_ms", "execute_s", "driver_s")
+        for k in (
+            "build_s", "build_stages", "build_run_ms", "execute_s",
+            "stage_s", "driver_s", "idle_core_s",
+        )
     }
     # Full-precision detail goes to a side file; the stdout line must stay
     # SHORT (driver captures only a bounded tail of stdout — round 1's

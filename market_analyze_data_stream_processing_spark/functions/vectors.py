@@ -1,16 +1,30 @@
-"""Vector scalar expressions — JVM-side array math, no Python UDFs.
+"""Vector math: the one owner of the engine's dot-product fold.
 
 The reference stores 384-dim MiniLM embeddings in ChromaDB and queries
 by cosine (rag_engine.py:154, 212-217). Here vectors are plain
-``array<float>`` columns and similarity is a Catalyst expression:
-``aggregate(zip_with(a, b, *), 0.0, +)`` — a sequential left fold, which
-keeps the float semantics deterministic and oracle-comparable.
+``array<float>`` columns, and every inner product the oracle checks is
+one float op sequence: DuckDB's ``list_inner_product``, the left fold
+``acc = acc + x_d·y_d`` over dims in order, starting at 0.0.
+
+Two twins compute it, and each element of one equals the other's bit
+for bit:
+
+- :func:`dot`, the JVM side: ``aggregate(zip_with(a, b, *), 0.0, +)``,
+  a Catalyst expression;
+- :func:`fold_dots` / :func:`fold_sumsq`, the Arrow side (numpy inside
+  ``mapInPandas`` / ``applyInPandas`` kernels and driver-side
+  constants). They run the same multiply-then-add per dim, sequential
+  across dims and vectorized across rows and columns. No BLAS: its
+  blocked summation reorders the adds and can flip the last ulp.
+
+Zero norms, ties and sentinels are the callers' policy, not the fold's.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -37,6 +51,23 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
+
+
+def fold_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """The ``(n, k)`` float64 matrix of :func:`dot` between every row of
+    ``X`` (n×d) and every row of ``C`` (k×d)."""
+    G = np.zeros((len(X), len(C)))
+    for d in range(X.shape[1]):
+        G += np.multiply.outer(X[:, d], C[:, d])
+    return G
+
+
+def fold_sumsq(X: np.ndarray) -> np.ndarray:
+    """:func:`dot` of every row of ``X`` with itself (squared norms)."""
+    acc = np.zeros(len(X))
+    for d in range(X.shape[1]):
+        acc += X[:, d] * X[:, d]
+    return acc
 
 
 def l2_norm(a: Column) -> Column:

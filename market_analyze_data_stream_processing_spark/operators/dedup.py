@@ -25,11 +25,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import unpin
-from ..functions.text import fingerprint, shingles, shingles_from_tokens, tokens
+from ..functions.text import fingerprint, shingles_from_tokens, tokens
+from ..functions.vectors import fold_dots, fold_sumsq
+from ..session import ensure_pyfiles
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -238,32 +240,6 @@ def lsh_band_candidates(
     return pairs.distinct()
 
 
-def simhash(text: Column, bits: int = 64, shingle_n: int = 2) -> Column:
-    """SimHash: sign-aggregate of per-shingle xxhash64 bits → 64-bit long.
-
-    For each bit b: +1 if hash bit set else -1, summed over shingles; the
-    fingerprint bit is the sign. Pure array expressions (map-only stage).
-    """
-    sh = shingles(text, shingle_n)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-
-    def bit_vote(bit: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_exprs = []
-    for b in range(bits):
-        votes = F.aggregate(hashes, F.lit(0), bit_vote(b))
-        bit_exprs.append(
-            F.when(votes > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_exprs[0]
-    for e in bit_exprs[1:]:
-        out = out.bitwiseOR(e)
-    return out
-
-
 def simhash_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -315,11 +291,6 @@ def simhash_fingerprints(
             ).otherwise(F.lit(0).cast("long"))
         )
     return votes.select(*keys, fp.alias("fingerprint"))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit simhashes (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def near_dup_pipeline(
@@ -408,12 +379,10 @@ def embedding_near_dup_pairs(
     from a bounded take, never a full-corpus count (see
     ``similarity.build_seed_cell_index``).
 
-    Numeric contract: the kernel accumulates ``outer(A[:,k], B[:,k])``
-    over k IN ELEMENT ORDER, so every pair's dot product is bitwise
-    identical to the sequential ``aggregate()`` fold (and to DuckDB's
-    ``list_inner_product``) in float64 — the oracle hash-matches without
-    any tolerance. A BLAS ``M @ M.T`` would be ~d× fewer passes but uses
-    blocked summation, which can flip the last ulp; exactness wins here.
+    Numeric contract: every dot product and norm is the shared fold
+    (``functions.vectors.fold_dots`` / ``fold_sumsq``), bit-identical to
+    the JVM ``dot`` and DuckDB's ``list_inner_product`` — the oracle
+    hash-matches without any tolerance.
 
     Memory is bounded: the similarity matrix is computed in row chunks
     of ``CHUNK`` (CHUNK×n floats live at once, not n×n), so a 100k-row
@@ -435,6 +404,8 @@ def embedding_near_dup_pairs(
     )
     thr = float(threshold)
     CHUNK = 1024
+    # The worker closure calls functions.vectors: workers must import the package.
+    ensure_pyfiles(df.sparkSession)
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -479,13 +450,8 @@ def embedding_near_dup_pairs(
     def pairs_within(ids, M):
         """Chunked cosine pairs over one dimension-consistent row set;
         returns (id_a, id_b, sim) numpy arrays (possibly empty)."""
-        n, d = M.shape
-        # k-ordered accumulation == the sequential fold, vectorized over rows.
-        nrm2 = np.zeros(n)
-        for k in range(d):
-            c = M[:, k]
-            nrm2 = nrm2 + c * c
-        nrm = np.sqrt(nrm2)
+        n = len(M)
+        nrm = np.sqrt(fold_sumsq(M))
         # Cosine is undefined for zero-norm vectors (including values
         # whose squares underflow float64); a 0/0 here would leak
         # inf/nan sims as silently-wrong pairs. Exclude those rows from
@@ -495,10 +461,7 @@ def embedding_near_dup_pairs(
         out_a, out_b, out_s = [], [], []
         for s in range(0, n - 1, CHUNK):
             e = min(s + CHUNK, n)
-            G = np.zeros((e - s, n))
-            for k in range(d):
-                G = G + np.multiply.outer(M[s:e, k], M[:, k])
-            sims = G / np.multiply.outer(nrm_safe[s:e], nrm_safe)
+            sims = fold_dots(M[s:e], M) / np.multiply.outer(nrm_safe[s:e], nrm_safe)
             # Pair on id VALUES (id_a < id_b), not row indices: with a
             # duplicated id in the block an index-triangle mask emits a
             # bogus (x, x) self-pair the join form never produced.

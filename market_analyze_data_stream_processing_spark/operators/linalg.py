@@ -133,66 +133,3 @@ def covariance_matrix(emb: DataFrame, col: str = "embedding", dim: int = 64) -> 
             ).alias("cov"),
         )
     )
-
-
-def pca_components(
-    emb: DataFrame, col: str = "embedding", dim: int = 64, k: int = 8
-):
-    """Top-k principal components of the embedding distribution.
-
-    The ONLY driver-side data is the d×d covariance (bounded by the
-    dimensionality, never the row count — the same contract as kmeans'
-    centroid collect) plus the d-vector mean; the eigendecomposition of
-    that tiny symmetric matrix runs in numpy. Components are sign-
-    normalized (largest-|coefficient| entry made positive) so results
-    are deterministic across runs. Returns (mean, components[k, d],
-    explained_variance[k])."""
-    rows = covariance_matrix(emb, col, dim).collect()
-    cov = np.zeros((dim, dim))
-    n = rows[0]["n"] if rows else 0
-    for r in rows:
-        cov[r["i"] - 1, r["j"] - 1] = r["cov"]
-        cov[r["j"] - 1, r["i"] - 1] = r["cov"]
-    sums = {
-        r["i"]: r["s"]
-        for r in emb.select(F.posexplode(col).alias("p", "x"))
-        .groupBy((F.col("p") + 1).alias("i"))
-        .agg(F.sum(F.col("x").cast("decimal(28,8)")).cast("double").alias("s"))
-        .collect()
-    }
-    mean = np.array([sums[i + 1] / n for i in range(dim)])
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T.copy()
-    for c in comps:  # deterministic sign
-        if c[np.argmax(np.abs(c))] < 0:
-            c *= -1
-    return mean, comps, vals[order]
-
-
-def pca_project(
-    emb: DataFrame,
-    mean: "np.ndarray",
-    components: "np.ndarray",
-    col: str = "embedding",
-    out_prefix: str = "pc",
-) -> DataFrame:
-    """Project vectors onto principal components JVM-side: each score
-    is Σ_i (x_i − mean_i)·w_i via zip_with + aggregate — whole-stage
-    codegen, no Python in the projection path, mean/components ride as
-    array literals (k·d doubles — broadcast-tiny)."""
-    centered = F.zip_with(
-        F.col(col).cast("array<double>"),
-        F.array(*[F.lit(float(m)) for m in mean]),
-        lambda x, m: x - m,
-    )
-    out = emb.withColumn("__c", centered)
-    for ki, comp in enumerate(components):
-        w = F.array(*[F.lit(float(v)) for v in comp])
-        score = F.aggregate(
-            F.zip_with(F.col("__c"), w, lambda c, wv: c * wv),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out = out.withColumn(f"{out_prefix}{ki + 1}", score)
-    return out.drop("__c")

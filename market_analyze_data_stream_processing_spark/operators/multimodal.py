@@ -81,22 +81,6 @@ def _decode_fake(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload[16:], dtype=np.uint8).reshape(n, h, w)
 
 
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """Real RIFF/WAVE bytes (16-bit mono PCM) from an int16 sample array —
-    stdlib ``wave``, no third-party codec. The audio twin of
-    encode_fake_image for exercising the real-decode path."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
-    return buf.getvalue()
-
-
 def _decode_real(payload: bytes) -> np.ndarray:
     """Real-codec path, dispatched on the container's magic bytes:
 

@@ -38,48 +38,19 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double
+from ..functions.vectors import as_double, fold_dots, fold_sumsq
+from ..session import ensure_pyfiles
 
 
-def _py_dot(a: Sequence[float], b: Sequence[float]) -> float:
-    """Sequential left-fold dot product — the SAME IEEE op sequence as
-    the engine's `aggregate(zip_with(...))` fold and DuckDB's
-    list_inner_product, so driver-computed constants stay bit-portable."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
-
-
-def _fold_sq_dists(
-    X, cands: Sequence[tuple[int, Sequence[float]]]
-):
-    """Squared-L2 from every row of ``X`` (n×sub_dim float64) to every
-    candidate centroid, as ``||x||^2 - 2 x.c + ||c||^2`` with every
-    inner product computed by the SAME sequential left-fold op sequence
-    (``acc = acc + x_d·y_d``, one multiply then one add per dim) that
-    the oracle's ``list_inner_product`` and the former JVM
-    ``aggregate(zip_with(...))`` expression use — vectorized ACROSS
-    rows, sequential ACROSS dims, so every distance double is
-    bit-identical to the engines' fold. The final combination is
-    ``(dxx - 2.0*dxc) + cc``, the exact parse order of the oracle
-    expression. Returns an (n, len(cands)) float64 matrix."""
-    import numpy as np
-
-    n, sd = X.shape
-    dxx = np.zeros(n)
-    for d in range(sd):
-        dxx = dxx + X[:, d] * X[:, d]
-    out = np.empty((n, len(cands)))
-    for j, (_code, c) in enumerate(cands):
-        dxc = np.zeros(n)
-        for d in range(sd):
-            dxc = dxc + X[:, d] * c[d]
-        out[:, j] = (dxx - 2.0 * dxc) + _py_dot(c, c)
-    return out
+def _sq_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Squared-L2 from every row of ``X`` to every row of ``C``, as
+    ``(||x||^2 - 2 x.c) + ||c||^2`` — the oracle expression's parse
+    order, each inner product the shared fold."""
+    return (fold_sumsq(X)[:, None] - 2.0 * fold_dots(X, C)) + fold_sumsq(C)[None, :]
 
 
 def pq_seeds(
@@ -182,45 +153,37 @@ def pq_encode(
     INTERPRETED higher-order folds per row (HOFs never enter
     whole-stage codegen), which made encode cost ~2.5 s for 2k rows —
     pure evaluator overhead, flat across SFs. The Arrow pass computes
-    the identical fold arithmetic (``_fold_sq_dists``) batch-wise;
+    the identical fold arithmetic (``_sq_dists``) batch-wise;
     centroids ride in the task closure, so re-encoding against a new
-    codebook never rebuilds a plan. Cross-engine bit-exactness is
-    unchanged — same multiply/add sequence per distance, and argmin
-    over code-ascending candidates IS the (distance, code) struct-min
-    tie-break."""
-    import numpy as np
-
+    codebook never rebuilds a plan. Argmin over code-ascending
+    candidates IS the (distance, code) struct-min tie-break."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    cands_by_ms = [
-        sorted(
-            (int(code), [float(x) for x in c])
-            for (mm, code), c in book.items()
-            if mm == ms
-        )
-        for ms in range(m)
-    ]
-    code_arrs = [
-        np.asarray([c for c, _v in cands], dtype=np.int64)
-        for cands in cands_by_ms
-    ]
+    books = []
+    for ms in range(m):
+        cands = sorted((int(code), c) for (mm, code), c in book.items() if mm == ms)
+        books.append((
+            np.asarray([code for code, _c in cands], dtype=np.int64),
+            np.asarray([c for _code, c in cands], dtype=np.float64),
+        ))
     schema = StructType(
         list(e.schema.fields)
         + [StructField(f"c{ms}", LongType()) for ms in range(m)]
     )
+    # The worker closure calls functions.vectors: workers must import the package.
+    ensure_pyfiles(e.sparkSession)
 
     def part(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            for ms in range(m):
-                sub = X[:, ms * sub_dim : (ms + 1) * sub_dim]
-                dmat = _fold_sq_dists(sub, cands_by_ms[ms])
+            for ms, (codes, C) in enumerate(books):
+                dmat = _sq_dists(X[:, ms * sub_dim : (ms + 1) * sub_dim], C)
                 # argmin returns the FIRST minimum; candidates are
                 # code-ascending, so ties resolve to the lowest code —
                 # identical to the former (d, code) struct-min.
-                pdf[f"c{ms}"] = code_arrs[ms][np.argmin(dmat, axis=1)]
+                pdf[f"c{ms}"] = codes[np.argmin(dmat, axis=1)]
             yield pdf
 
     return e.mapInPandas(part, schema)
@@ -236,12 +199,12 @@ def pq_adc_lut(
     subvector to each (subspace, code) centroid, rounded at 6 — m*k
     doubles computed with the same left-fold op sequence the engines
     use, so the literal table matches the oracle's derivation."""
-    q = [float(x) for x in query_vec]
+    q = np.asarray(query_vec, dtype=np.float64)[None, :]
     lut: dict[tuple[int, int], float] = {}
     for (ms, code), c in book.items():
-        qs = q[ms * sub_dim : (ms + 1) * sub_dim]
-        d = _py_dot(qs, qs) - 2.0 * _py_dot(qs, c) + _py_dot(c, c)
-        lut[(ms, code)] = round(d, 6)
+        qs = q[:, ms * sub_dim : (ms + 1) * sub_dim]
+        d = _sq_dists(qs, np.asarray([c], dtype=np.float64))[0, 0]
+        lut[(ms, code)] = round(float(d), 6)
     return lut
 
 

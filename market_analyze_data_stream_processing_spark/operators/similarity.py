@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..functions.vectors import as_double, cosine_sim, lit_vector
+from ..functions.vectors import as_double, cosine_sim, dot, fold_dots, fold_sumsq, lit_vector
+from ..session import ensure_pyfiles
 
 
 def knn_exact(
@@ -70,12 +71,8 @@ def with_lsh_bucket(
     emb = as_double(F.col(vec_col))
     bucket = F.lit(0)
     for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(emb, lit_vector(plane.tolist()), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        side = dot(emb, lit_vector(plane.tolist()))
+        bucket = bucket + F.when(side > 0, F.lit(1 << i)).otherwise(F.lit(0))
     return df.withColumn(out_col, bucket)
 
 
@@ -140,9 +137,7 @@ def build_seed_cell_index(
     """
     from pyspark.sql import Observation
 
-    from ..functions.vectors import as_double as _as_double
-
-    emb = _as_double(F.col(vec_col))
+    emb = as_double(F.col(vec_col))
     sumsq = F.aggregate(emb, F.lit(0.0), lambda acc, x: acc + x * x)
     valid = F.col(vec_col).isNotNull() & (sumsq > F.lit(0.0))
     obs = Observation()
@@ -226,12 +221,11 @@ def seed_cell_column(
     same driver-state budget as the k-means seeder).
 
     Assignment: cell = id of the seed maximizing cosine(row, seed),
-    ties to the smallest seed id; computed with the k-ordered
-    accumulation fold so the scores — and therefore the argmax — are
-    bit-identical to a SQL engine's sequential ``list_inner_product``
-    (the property the DuckDB oracle differential checks).  Rows that
-    cannot be assigned keep deterministic sentinel cells: NULL or
-    zero-norm vector → -1 (a ZERO-LENGTH vector is zero-norm, so it
+    ties to the smallest seed id; the scores are the shared fold
+    (``fold_dots`` / ``fold_sumsq``), so they — and therefore the
+    argmax — are bit-identical to the oracle's ``list_inner_product``.
+    Rows that cannot be assigned keep deterministic sentinel cells: NULL
+    or zero-norm vector → -1 (a ZERO-LENGTH vector is zero-norm, so it
     takes -1 too — explicitly, not via -1-0); a vector whose length
     (≥ 1) matches no seed → -1 - length, which is ≤ -2 and therefore
     never collides with the -1 class (ragged rows still co-group among
@@ -275,13 +269,10 @@ def seed_cell_column(
     for length in {len(v) for _i, v in seeds}:
         grp = [(i, v) for i, v in seeds if len(v) == length]
         ids = np.asarray([i for i, _v in grp], dtype=np.int64)
-        C = np.stack([np.asarray(v, dtype=np.float64) for _i, v in grp])
-        # k-ordered norm accumulation — matches sqrt(list_inner_product).
-        nrm2 = np.zeros(len(grp))
-        for j in range(length):
-            c = C[:, j]
-            nrm2 = nrm2 + c * c
-        seeds_by_len[length] = (ids, C, np.sqrt(nrm2))
+        C = np.asarray([v for _i, v in grp], dtype=np.float64)
+        seeds_by_len[length] = (ids, C, np.sqrt(fold_sumsq(C)))
+    # The worker closure calls functions.vectors: workers must import the package.
+    ensure_pyfiles(df.sparkSession)
 
     @F.pandas_udf(LongType())
     def cell_of(vs: pd.Series) -> pd.Series:
@@ -304,16 +295,9 @@ def seed_cell_column(
                 continue
             cids, C, cnrm = seeds_by_len[int(length)]
             M = np.stack(vs.iloc[sel].to_numpy()).astype(np.float64)
-            n = len(sel)
-            D = np.zeros((n, len(cids)))
-            rnrm2 = np.zeros(n)
-            for j in range(int(length)):
-                col = M[:, j]
-                D = D + np.multiply.outer(col, C[:, j])
-                rnrm2 = rnrm2 + col * col
-            rnrm = np.sqrt(rnrm2)
+            rnrm = np.sqrt(fold_sumsq(M))
             ok = rnrm > 0.0
-            score = D / np.multiply.outer(np.where(ok, rnrm, 1.0), cnrm)
+            score = fold_dots(M, C) / np.multiply.outer(np.where(ok, rnrm, 1.0), cnrm)
             # first-max == smallest seed index == smallest seed id
             # (seeds are id-sorted) — the SQL `ORDER BY score DESC, cid`
             # tie-break.
@@ -479,10 +463,8 @@ def with_ivf_cell(
 
     Bit-parity with the expression form (and the oracle's
     list_inner_product composition):
-    - every cosine is the same op sequence as
-      functions/vectors.cosine_sim — sequential-fold dots
-      (acc = acc + x_d*y_d, vectorized across rows, sequential across
-      dims), den = sqrt(dxx)*sqrt(dcc), sim = dab/den;
+    - every cosine is functions/vectors.cosine_sim's composition over
+      the shared fold: den = sqrt(dxx)*sqrt(dcc), sim = dab/den;
     - a zero-norm row or centroid made sim NULL, and struct ordering
       treats NULL as smallest — replicated by scoring those cells
       -inf (legit cosines are >= -1, so the proxy can't collide);
@@ -491,51 +473,32 @@ def with_ivf_cell(
       assign_clusters_arrow tie-break), which also makes the all-NULL
       (zero-norm) row land in the highest cell, exactly as the struct
       max of all-NULL sims did."""
-    import math
-
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     ids = sorted(centroids)
-    C = [np.asarray(centroids[c], dtype=np.float64) for c in ids]
-    ncc = [math.sqrt(_seq_dot(c, c)) for c in C]
+    C = np.asarray([centroids[c] for c in ids], dtype=np.float64)
+    ncc = np.sqrt(fold_sumsq(C))
     id_arr = np.asarray(ids, dtype=np.int64)
     schema = StructType(
         list(df.schema.fields) + [StructField(out_col, IntegerType())]
     )
+    # The worker closure calls functions.vectors: workers must import the package.
+    ensure_pyfiles(df.sparkSession)
 
     def part(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n, sd = X.shape
-            dxx = np.zeros(n)
-            for d in range(sd):
-                dxx = dxx + X[:, d] * X[:, d]
-            nxx = np.sqrt(dxx)
-            sims = np.empty((n, len(ids)))
-            for j, c in enumerate(C):
-                dab = np.zeros(n)
-                for d in range(sd):
-                    dab = dab + X[:, d] * c[d]
-                den = nxx * ncc[j]
-                sims[:, j] = np.divide(
-                    dab, den, out=np.full(n, -np.inf), where=den != 0
-                )
+            den = np.multiply.outer(np.sqrt(fold_sumsq(X)), ncc)
+            sims = np.divide(
+                fold_dots(X, C), den, out=np.full(den.shape, -np.inf), where=den != 0
+            )
             idx = sims.shape[1] - 1 - np.argmax(sims[:, ::-1], axis=1)
             pdf[out_col] = id_arr[idx].astype(np.int32)
             yield pdf
 
     return df.mapInPandas(part, schema)
-
-
-def _seq_dot(a, b) -> float:
-    """Sequential left-fold dot — the cosine_sim/list_inner_product op
-    sequence, for driver-side centroid norms."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
 
 
 def probe_buckets(q_bucket: int, n_planes: int, probe_hamming: int = 0) -> list[int]:

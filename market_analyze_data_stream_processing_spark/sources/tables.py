@@ -51,11 +51,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return cache.get("table", (sf_dir.rstrip("/"), name), build, cache.file_token(path))
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached entry point for the events table — see :func:`load_table`."""
-    return load_table(spark, sf_dir, "events")
-
-
 def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet has shipped with ``ts`` in several physical encodings
     across testdata regenerations (TIMESTAMP(NANOS), then timestamp[us]

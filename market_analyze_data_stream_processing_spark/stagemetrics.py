@@ -10,7 +10,8 @@ the bench reads the executor-side totals of exactly that query's stages
 shuffle read/write bytes, task count — and records them in
 BENCH_DETAIL.json.  Each stage's submission time splits those stages
 into the jobs the plan build ran (pins, driver collects) and the ones
-the execution ran.
+the execution ran; its completion time closes the interval the stage
+was running, which separates stage time from the driver's gaps.
 
 Attribution then becomes a measurement instead of an inference:
 
@@ -133,9 +134,9 @@ def stage_records(spark: SparkSession, floor: int) -> list[dict] | None:
     """One record per stage with ``stageId >= floor``, newest first;
     None on any error.
 
-    A record holds ``submitted_ms`` (epoch ms, the clock of
-    ``time.time()``; ``inf`` for a SKIPPED stage, which is never
-    submitted) and the :data:`FIELDS` values. ``stages_skipped`` is the
+    A record holds ``submitted_ms`` and ``completed_ms`` (epoch ms, the
+    clock of ``time.time()``; ``inf`` for a SKIPPED stage, which never
+    runs) and the :data:`FIELDS` values. ``stages_skipped`` is the
     skipped flag: 1 for a SKIPPED stage (a reused shuffle output, no
     task run), whose other values are all 0, and ``stages`` is 1 for an
     executed one.
@@ -150,9 +151,10 @@ def stage_records(spark: SparkSession, floor: int) -> list[dict] | None:
             skipped = s.status().toString() == "SKIPPED"
             rec = {f: 0 if skipped else getattr(s, g)() for f, g in _GETTERS.items()}
             rec["cpu_ms"] /= 1e6  # the store keeps nanoseconds
-            sub = s.submissionTime()
+            sub, done = s.submissionTime(), s.completionTime()
             rec.update(
                 submitted_ms=sub.get().getTime() if sub.isDefined() else float("inf"),
+                completed_ms=done.get().getTime() if done.isDefined() else float("inf"),
                 stages=int(not skipped),
                 stages_skipped=int(skipped),
             )

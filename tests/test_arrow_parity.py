@@ -7,9 +7,14 @@ cosine) resolution. These tests pin the claims on the inputs where the
 two formulations could plausibly part: exact distance ties, duplicate
 centroids, and zero-norm rows/centroids — the with_ivf_cell case is
 checked directly against the ORIGINAL struct-expression twin built
-inline here."""
+inline here. Under all of them, the shared fold kernel itself is
+checked against the JVM ``dot`` to the last bit."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -17,6 +22,9 @@ from pyspark.sql import functions as F
 from market_analyze_data_stream_processing_spark.functions.vectors import (
     as_double,
     cosine_sim,
+    dot,
+    fold_dots,
+    fold_sumsq,
     lit_vector,
 )
 from market_analyze_data_stream_processing_spark.operators.pq import pq_encode
@@ -44,6 +52,36 @@ def _cell_expr_twin(centroids, vec_col):
 def _vec_frame(spark, vecs):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_fold_kernel_matches_jvm_dot_bit_for_bit(spark):
+    """fold_dots / fold_sumsq equal Spark's ``vectors.dot`` of the same
+    pairs exactly (compared as ``float.hex``) on a zero row, subnormal
+    rows and magnitudes mixed within and across rows."""
+    rng = np.random.default_rng(11)
+    d = 24
+    X = rng.standard_normal((10, d)) * 10.0 ** rng.uniform(-6, 6, size=(10, 1))
+    X[0] = 0.0
+    X[1] = 5e-324 * rng.integers(-1000, 1000, size=d)  # subnormals
+    X[2] *= 10.0 ** rng.uniform(-150, 150, size=d)
+    C = rng.standard_normal((4, d)) * 10.0 ** rng.uniform(-3, 3, size=(4, 1))
+    C[3] = X[1]  # subnormal x subnormal underflows
+    rows = [
+        (i, j, X[i].tolist(), C[j].tolist())
+        for i in range(len(X))
+        for j in range(len(C))
+    ]
+    df = spark.createDataFrame(rows, "i int, j int, x array<double>, c array<double>")
+    got = df.select(
+        "i", "j",
+        dot(F.col("x"), F.col("c")).alias("xc"),
+        dot(F.col("x"), F.col("x")).alias("xx"),
+    ).collect()
+    G, S = fold_dots(X, C), fold_sumsq(X)
+    assert len(got) == G.size
+    for r in got:
+        assert r["xc"].hex() == float(G[r["i"], r["j"]]).hex(), (r["i"], r["j"])
+        assert r["xx"].hex() == float(S[r["i"]]).hex(), r["i"]
 
 
 def test_ivf_cell_matches_expression_twin_on_edges(spark):
@@ -110,3 +148,44 @@ def test_pq_encode_preserves_input_columns_and_types(spark):
     row = out.collect()[0]
     assert row["label"] == 7 and row["c0"] == 0 and row["c1"] == 0
     assert [round(float(x), 4) for x in row["embedding"]] == [1.0, 2.0, 3.0, 4.0]
+
+
+def test_fold_kernels_ship_the_package_to_workers(tmp_path):
+    """A host application that puts the package on ``sys.path`` and runs
+    from another cwd (how ``__spark_entry__`` is loaded) gives Python
+    workers no path to it, and every kernel's worker closure calls
+    ``functions.vectors``: each kernel must ship the package itself.
+    Runs in a fresh process whose cwd is not the checkout, one fresh
+    SparkContext per kernel so no kernel rides on another's shipment."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+import numpy as np
+from pyspark.sql import SparkSession
+from market_analyze_data_stream_processing_spark.operators.dedup import embedding_near_dup_pairs
+from market_analyze_data_stream_processing_spark.operators.pq import pq_encode
+from market_analyze_data_stream_processing_spark.operators.similarity import (
+    seed_cell_column, with_ivf_cell,
+)
+kernels = [
+    lambda df: pq_encode(df, {{(0, 0): [1.0, 0.0]}}, m=1, sub_dim=2),
+    lambda df: with_ivf_cell(df, {{0: np.array([1.0, 0.0])}}, "embedding"),
+    lambda df: seed_cell_column(df)[0],
+    lambda df: embedding_near_dup_pairs(df, cells=None),
+]
+contexts = []  # held so no new context reuses a stopped one's id()
+for kernel in kernels:
+    spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    contexts.append(spark.sparkContext)
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [1.0, 0.1], 0)], "vec_id long, embedding array<double>, label int"
+    )
+    print(kernel(df).count())
+    spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split() == ["2", "2", "2", "1"]

@@ -8,13 +8,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from market_analyze_data_stream_processing_spark.functions.text import shingles
 from market_analyze_data_stream_processing_spark.operators.dedup import (
     exact_dedup,
-    hamming64,
     jaccard_pairs,
     lsh_band_candidates,
     minhash_signatures,
-    simhash,
     simhash_fingerprints,
 )
 from market_analyze_data_stream_processing_spark.operators.similarity import (
@@ -63,11 +62,11 @@ def test_lsh_band_candidates_find_near_dups(docs):
 
 
 def test_simhash_distance_orders_similarity(spark, docs):
-    out = {r["doc_id"]: r["sh"] for r in docs.select(
-        "doc_id", simhash(F.col("text"), bits=16).alias("sh")).collect()}
+    out = {r["doc_id"]: r["fingerprint"]
+           for r in simhash_fingerprints(docs, bits=16).collect()}
     df = spark.createDataFrame(
         [(out[0], out[1]), (out[0], out[2])], ["a", "b"]
-    ).select(hamming64(F.col("a"), F.col("b")).alias("d")).collect()
+    ).select(F.bit_count(F.col("a").bitwiseXOR(F.col("b"))).alias("d")).collect()
     near_dist, far_dist = df[0]["d"], df[1]["d"]
     assert near_dist < far_dist
 
@@ -228,6 +227,26 @@ def test_ann_ivf_stored_rebuild_serves_fresh_centroids(spark, vectors, tmp_path)
     assert second and all(v >= 10_000 for v in second)
     # the stale version's entry is gone: the path's one entry is v2
     assert cache.tokens("ivf")[("ivf-stored", path)] == 2
+
+
+def simhash(text, bits: int = 64, shingle_n: int = 2):
+    """The per-row SimHash reference: for each bit b, +1 per shingle
+    whose xxhash64 has bit b set and -1 otherwise; the fingerprint bit
+    is the sign of the sum. Pure array folds, one row at a time."""
+    hashes = F.transform(shingles(text, shingle_n), lambda s: F.xxhash64(s))
+
+    def bit_vote(bit: int):
+        return lambda acc, h: acc + F.when(
+            F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1
+        ).otherwise(-1)
+
+    out = F.lit(0).cast("long")
+    for b in range(bits):
+        votes = F.aggregate(hashes, F.lit(0), bit_vote(b))
+        out = out.bitwiseOR(
+            F.when(votes > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
+        )
+    return out
 
 
 def test_simhash_fingerprints_match_expression_form(docs):

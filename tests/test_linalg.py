@@ -37,41 +37,6 @@ def test_covariance_matches_numpy_and_partitioning(spark):
     assert by_parts[1] == by_parts[6] == by_parts[7]
 
 
-def test_pca_matches_numpy_and_projects_jvm_side(spark):
-    rng = np.random.RandomState(3)
-    # anisotropic cloud: dominant direction along a known axis mix
-    base = rng.randn(120, 4) * np.array([5.0, 2.0, 0.5, 0.1])
-    Q, _ = np.linalg.qr(rng.randn(4, 4))
-    X = (base @ Q).astype(np.float32)
-    rows = [(i, [float(v) for v in X[i]]) for i in range(len(X))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    from market_analyze_data_stream_processing_spark.operators.linalg import (
-        pca_components,
-        pca_project,
-    )
-
-    mean, comps, ev = pca_components(df, dim=4, k=2)
-    Xd = X.astype(np.float64)
-    ref_cov = np.cov(Xd, rowvar=False, ddof=1)
-    ref_vals, ref_vecs = np.linalg.eigh(ref_cov)
-    order = np.argsort(ref_vals)[::-1][:2]
-    # eigenvalues match and come out in descending order
-    assert ev[0] >= ev[1]
-    assert np.allclose(ev, ref_vals[order], rtol=1e-4)
-    # components match numpy up to sign; orthonormal
-    for c, r in zip(comps, ref_vecs[:, order].T):
-        assert min(np.linalg.norm(c - r), np.linalg.norm(c + r)) < 1e-4
-    assert np.allclose(comps @ comps.T, np.eye(2), atol=1e-8)
-    # JVM-side projection equals the numpy projection
-    out = pca_project(df, mean, comps).orderBy("vec_id").collect()
-    proj = (Xd - mean) @ comps.T
-    got = np.array([[r["pc1"], r["pc2"]] for r in out])
-    assert np.allclose(got, proj, atol=1e-6)
-    # score variance along pc1 ~ top eigenvalue (sanity of the pipeline)
-    assert abs(np.var(got[:, 0], ddof=1) - ev[0]) / ev[0] < 1e-3
-
-
 def test_covariance_refuses_non_finite_components(spark):
     """Non-finite policy (round-9 ADVICE): floor(NaN*1e8+0.5).astype
     (int64) is undefined and would silently poison the whole matrix

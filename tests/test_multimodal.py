@@ -17,6 +17,22 @@ from market_analyze_data_stream_processing_spark.operators.multimodal import (
 )
 
 
+def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
+    """Real RIFF/WAVE bytes (16-bit mono PCM) from an int16 sample array —
+    stdlib ``wave``, no third-party codec: the audio fixture for the
+    real-decode path."""
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
+    return buf.getvalue()
+
+
 @pytest.fixture(scope="module")
 def media(spark):
     rows = [
@@ -82,10 +98,6 @@ def test_real_decoder_decodes_wav_audio(spark):
     stdlib-wave 16-bit PCM WAV payloads flow through the same
     extract_features stage as synthetic media, and the intensity stats
     match a direct numpy computation on the (s >> 8) + 128 u8 mapping."""
-    from market_analyze_data_stream_processing_spark.operators.multimodal import (
-        encode_wav,
-    )
-
     rng = np.random.default_rng(7)
     clips = {
         10: (rng.integers(-32768, 32767, size=400)).astype(np.int16),

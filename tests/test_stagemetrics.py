@@ -8,7 +8,8 @@
 - the [floor, now] bracket attributes exactly one query's stages:
   a parquet scan + shuffle shows input and shuffle bytes, CPU time,
   and completed tasks; an empty bracket shows all-zero totals;
-- bench.run_one splits a query's wall at the end of its plan build.
+- bench.run_one splits a query's wall at the end of its plan build,
+  and its execute time into stage time and the driver's gaps.
 """
 
 from __future__ import annotations
@@ -107,6 +108,30 @@ def test_run_one_splits_the_wall_at_build_end(spark):
     wall, m = bench.run_one(spark, Query("lazy", lazy, None), SF)
     assert (m["build_stages"], m["build_run_ms"]) == (0, 0) and m["stages"] >= 1
     assert abs(m["build_s"] + m["execute_s"] - wall) <= 1e-3
+
+
+def test_run_one_splits_execute_into_stage_and_driver_time(spark):
+    """One task over a slow expression keeps one core busy for the
+    whole stage: the stage interval covers nearly all of ``execute_s``
+    (a small ``driver_s``), and the other cores' share of it is
+    ``idle_core_s``. Build, driver and stage time add up to the wall."""
+    import bench
+    from market_analyze_data_stream_processing_spark.plans.registry import Query
+
+    def slow(spark, sf_dir):
+        return spark.range(0, 10_000, 1, 1).selectExpr(
+            "aggregate(sequence(1, 2000), 0L, (acc, x) -> acc + x * id) s"
+        )
+
+    q = Query("slow", slow, None)
+    bench.run_one(spark, q, SF)  # warm: the first run compiles the plan
+    wall, m = bench.run_one(spark, q, SF)
+    assert (m["stages"], m["tasks"]) == (1, 1)
+    assert abs(m["build_s"] + m["driver_s"] + m["stage_s"] - wall) <= 2e-3
+    assert m["stage_s"] > 0.3, "the slow expression must dominate the wall"
+    assert 0 <= m["driver_s"] < m["stage_s"] / 4
+    cores = spark.sparkContext.defaultParallelism
+    assert m["idle_core_s"] > m["stage_s"] * (1 - 1 / cores) / 2
 
 
 def test_bench_top_warns_when_it_times_fewer(monkeypatch, capsys):

@@ -2,9 +2,10 @@
 
 The driver has regenerated /root/testdata more than once, and the physical
 encoding of events.ts has changed between regenerations (TIMESTAMP(NANOS)
-in rounds 1-3, timestamp[us] NTZ in round 4). ``load_events`` must yield
-identical instants for every encoding it has ever seen — this test writes
-tiny fixture parquets in all three encodings and asserts equality.
+in rounds 1-3, timestamp[us] NTZ in round 4). ``load_table(..., "events")``
+must yield identical instants for every encoding it has ever seen — this
+test writes tiny fixture parquets in all three encodings and asserts
+equality.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from market_analyze_data_stream_processing_spark.sources.tables import load_events
+from market_analyze_data_stream_processing_spark.sources.tables import load_table
 
 # Instants with sub-second precision; the nanos fixture adds sub-microsecond
 # digits that must TRUNCATE (not round) to these micros.
@@ -65,7 +66,7 @@ def encoded_dirs(tmp_path_factory):
 def test_load_events_identical_instants_across_encodings(spark, encoded_dirs):
     results = {}
     for label, d in encoded_dirs.items():
-        df = load_events(spark, d)
+        df = load_table(spark, d, "events")
         assert df.schema["ts"].dataType.typeName() == "timestamp", (
             f"{label}: expected session-TZ timestamp, got {df.schema['ts'].dataType}"
         )
@@ -78,7 +79,7 @@ def test_load_events_identical_instants_across_encodings(spark, encoded_dirs):
 
 def test_load_events_matches_real_testdata(spark):
     # Whatever encoding the driver last generated, the loader must read it.
-    df = load_events(spark, "/root/testdata/sf0.001")
+    df = load_table(spark, "/root/testdata/sf0.001", "events")
     assert df.schema["ts"].dataType.typeName() == "timestamp"
     assert df.limit(1).count() == 1
 

@@ -36,8 +36,9 @@ Usage:
 Output: one line per classified query plus a suite summary with the
 count per class, the wall-delta mass each class carries, and the
 suite-median host CPU factor used, then each artifact's suite layers
-(build, build-time stages and run time, execute, driver; ``n/a`` for an
-artifact written before ``bench.py`` recorded them). Queries missing
+(build, build-time stages and run time, execute, stage, driver and
+idle-core time; ``n/a`` for an artifact written before ``bench.py``
+recorded them). Queries missing
 exec metrics on either side fall back to `wall-only` (the pre-round-14
 situation) and are listed, not classified.
 """
