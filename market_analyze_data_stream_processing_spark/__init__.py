@@ -14,6 +14,17 @@ Layout:
     operators/  analytics, dedup, similarity, latest-per-key, retention
     plans/      the oracle-checked query registry (driver contract)
     streaming/  Structured Streaming ingest, foreachBatch upserts, heartbeat
+
+Worker closures call package code; the package registers itself with
+cloudpickle by value, so that code travels in the pickled command and
+no Python worker imports the package. Hence a worker function must not
+import the package in its own body: import on the driver and capture.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -115,9 +115,6 @@ def build_doc_store(
         intraday_metrics_messages,
         technical_messages,
     )
-    from .session import ensure_pyfiles
-
-    ensure_pyfiles(spark)
     zero = F.lit(0.0)
 
     d = daily_summary_messages(daily, publish_time=F.lit(int(now - 3600))).select(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from ..cache import unpin
 from ..functions.text import fingerprint, shingles_from_tokens, tokens
 from ..functions.vectors import fold_dots, fold_sumsq
-from ..session import ensure_pyfiles
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -404,8 +403,6 @@ def embedding_near_dup_pairs(
     )
     thr = float(threshold)
     CHUNK = 1024
-    # The worker closure calls functions.vectors: workers must import the package.
-    ensure_pyfiles(df.sparkSession)
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(

@@ -98,9 +98,6 @@ def covariance_matrix(emb: DataFrame, col: str = "embedding", dim: int = 64) -> 
     once at the end) and the column sums S_i DECIMAL-exact from one
     posexplode aggregate. n rides as a 1-row broadcast contract
     scalar."""
-    from ..session import ensure_pyfiles
-
-    ensure_pyfiles(emb.sparkSession)
     g = (
         gram_partials(emb, col, dim)
         .groupBy("i", "j")

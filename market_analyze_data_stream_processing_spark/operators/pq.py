@@ -43,7 +43,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, fold_dots, fold_sumsq
-from ..session import ensure_pyfiles
 
 
 def _sq_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -170,8 +169,6 @@ def pq_encode(
         list(e.schema.fields)
         + [StructField(f"c{ms}", LongType()) for ms in range(m)]
     )
-    # The worker closure calls functions.vectors: workers must import the package.
-    ensure_pyfiles(e.sparkSession)
 
     def part(batches):
         for pdf in batches:

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions.vectors import as_double, cosine_sim, dot, fold_dots, fold_sumsq, lit_vector
-from ..session import ensure_pyfiles
 
 
 def knn_exact(
@@ -271,8 +270,6 @@ def seed_cell_column(
         ids = np.asarray([i for i, _v in grp], dtype=np.int64)
         C = np.asarray([v for _i, v in grp], dtype=np.float64)
         seeds_by_len[length] = (ids, C, np.sqrt(fold_sumsq(C)))
-    # The worker closure calls functions.vectors: workers must import the package.
-    ensure_pyfiles(df.sparkSession)
 
     @F.pandas_udf(LongType())
     def cell_of(vs: pd.Series) -> pd.Series:
@@ -482,8 +479,6 @@ def with_ivf_cell(
     schema = StructType(
         list(df.schema.fields) + [StructField(out_col, IntegerType())]
     )
-    # The worker closure calls functions.vectors: workers must import the package.
-    ensure_pyfiles(df.sparkSession)
 
     def part(batches):
         for pdf in batches:

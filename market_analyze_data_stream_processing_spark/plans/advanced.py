@@ -722,9 +722,6 @@ def q_tfidf_top_tokens(spark, sf_dir):
 def q_grouped_pandas_quantiles(spark, sf_dir):
     import pandas as pd
 
-    from ..session import ensure_pyfiles
-
-    ensure_pyfiles(spark)
     e = load_table(spark, sf_dir, "events")
 
     def quantiles(pdf: pd.DataFrame) -> pd.DataFrame:

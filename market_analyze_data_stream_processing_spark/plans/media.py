@@ -25,14 +25,12 @@ from ..operators.multimodal import (
     media_embedding,
     sample_frames,
 )
-from ..session import ensure_pyfiles
 from .registry import register
 
 N_IMAGES, N_VIDEOS = 48, 16
 
 
 def synthetic_media(spark: SparkSession) -> DataFrame:
-    ensure_pyfiles(spark)
     base = spark.range(N_IMAGES + N_VIDEOS).repartition(8)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

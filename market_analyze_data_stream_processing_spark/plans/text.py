@@ -1455,9 +1455,6 @@ def q_bm25(spark, sf_dir):
 )
 def q_heavy_hitters(spark, sf_dir):
     from ..operators.frequency import heavy_hitters
-    from ..session import ensure_pyfiles
-
-    ensure_pyfiles(spark)  # MG closure references module fns on workers
 
     d = spread(load_table(spark, sf_dir, "documents"))
     toks = d.select(F.explode(T.tokens(F.col("text"))).alias("item"))

@@ -1,45 +1,19 @@
 """SparkSession factory.
 
-Local test profile mirrors the driver environment (local[32]); the same
-settings scale to a real cluster — AQE handles partition coalescing and
-skew joins at runtime, so shuffle.partitions here is an upper bound, not
-a hand-tuned constant.
+The local test profile runs ``local[SPARK_GRAFT_CPUS]`` (committed
+numbers use 4); the same settings scale to a real cluster — AQE handles
+partition coalescing and skew joins at runtime, so shuffle.partitions
+here is an upper bound, not a hand-tuned constant.
 """
 
 from __future__ import annotations
 
 import os
-import zipfile
 
 from pyspark.sql import SparkSession
 
+# Written only by perfbench/harness.py; the next benchmark change removes both.
 _PYFILES_SHIPPED: set[int] = set()
-
-
-def ensure_pyfiles(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via addPyFile.
-
-    Python-UDF closures reference module functions, which pickle BY
-    REFERENCE — workers must be able to import the package. When the
-    host application (e.g. the verify driver) runs from another cwd,
-    sys.path tricks don't propagate to workers; a zip shipped through
-    addPyFile does. Idempotent per SparkContext. Call it at the top of
-    any query/operator path that uses pandas UDFs / mapInPandas."""
-    key = id(spark.sparkContext)
-    if key in _PYFILES_SHIPPED:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join("/tmp", f"{pkg_name}_pyfiles.zip")
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    _PYFILES_SHIPPED.add(key)
 
 
 def get_spark(app_name: str = "mads-spark") -> SparkSession:

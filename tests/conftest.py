@@ -29,3 +29,23 @@ def spark():
     )
     yield s
     s.stop()
+
+
+SF1_DIR = "/tmp/sf1"
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the sf1-contract tests that skipped because the sf1 corpus
+    is missing, so the skip is not mistaken for a pass."""
+    if os.path.isdir(SF1_DIR):
+        return
+    missed = [
+        r.nodeid
+        for r in terminalreporter.stats.get("skipped", [])
+        if "make_sf1.py" in str(r.longrepr)
+    ]
+    if missed:
+        terminalreporter.write_line(
+            f"sf1 corpus {SF1_DIR} missing, did not run: {', '.join(missed)}; "
+            "build it with: python tools/make_sf1.py"
+        )

@@ -29,8 +29,12 @@ from market_analyze_data_stream_processing_spark.functions.vectors import (
 )
 from market_analyze_data_stream_processing_spark.operators.pq import pq_encode
 from market_analyze_data_stream_processing_spark.operators.similarity import (
+    hyperplanes,
+    ivf_index,
     with_ivf_cell,
+    with_lsh_bucket,
 )
+from market_analyze_data_stream_processing_spark.sources.tables import load_table
 
 
 def _cell_expr_twin(centroids, vec_col):
@@ -117,6 +121,31 @@ def test_ivf_cell_matches_expression_twin_on_edges(spark):
     assert got[2] == 5  # all-NULL (zero-norm row) -> highest cell id
 
 
+def test_ann_cells_match_their_twins_at_corpus_scale(spark):
+    """The q_ann_ivf and q_ann_lsh oracle rows are recall thresholds, so
+    the differential would pass any cell assignment that keeps recall
+    up. Pin both cell columns row for row on the 2,000 sf0.1 embeddings:
+    IVF cells against the struct-expression twin, LSH buckets against
+    bits rebuilt in numpy from ``fold_dots`` (bit-equal to ``dot``)."""
+    e = load_table(spark, "/root/testdata/sf0.1", "embeddings")
+    centroids = ivf_index(e)
+    rows = (
+        with_ivf_cell(e, centroids, "embedding", out_col="cell")
+        .withColumn("twin", _cell_expr_twin(centroids, "embedding"))
+        .select("vec_id", "cell", "twin")
+        .collect()
+    )
+    assert len(rows) == 2000
+    assert [r["vec_id"] for r in rows if r["cell"] != r["twin"]] == []
+
+    dim = e.select(F.size("embedding")).first()[0]
+    planes = hyperplanes(dim)
+    rows = with_lsh_bucket(e, planes).select("vec_id", "embedding", "bucket").collect()
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    bits = (fold_dots(X, planes) > 0) << np.arange(len(planes))
+    assert [r["bucket"] for r in rows] == bits.sum(axis=1).tolist()
+
+
 def test_pq_encode_tie_resolves_to_lowest_code(spark):
     """Duplicate centroids produce identical distances; the (distance,
     code) struct-min semantics say the LOWEST code wins — pinned against
@@ -150,42 +179,92 @@ def test_pq_encode_preserves_input_columns_and_types(spark):
     assert [round(float(x), 4) for x in row["embedding"]] == [1.0, 2.0, 3.0, 4.0]
 
 
-def test_fold_kernels_ship_the_package_to_workers(tmp_path):
+def test_worker_closures_run_without_the_package_on_the_worker_path(tmp_path):
     """A host application that puts the package on ``sys.path`` and runs
     from another cwd (how ``__spark_entry__`` is loaded) gives Python
-    workers no path to it, and every kernel's worker closure calls
-    ``functions.vectors``: each kernel must ship the package itself.
-    Runs in a fresh process whose cwd is not the checkout, one fresh
-    SparkContext per kernel so no kernel rides on another's shipment."""
+    workers no path to the package, yet every kernel below runs a worker
+    closure that calls package functions or classes: the fold kernels,
+    the k-means assignment pass, the enrich embedding and sentiment
+    UDFs, the ``mads_feed`` Python data source and a stateful operator
+    whose step is a module function. They run only because the package
+    pickles itself by value. Runs in a fresh process with ``PYTHONPATH``
+    unset and a cwd outside the checkout, one fresh SparkSession per
+    kernel so no kernel rides on state another one left in its workers."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = f"""
-import sys
+import json, sys
 sys.path.insert(0, {repo!r})
 import numpy as np
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from market_analyze_data_stream_processing_spark.operators.clustering import assign_clusters_arrow
 from market_analyze_data_stream_processing_spark.operators.dedup import embedding_near_dup_pairs
+from market_analyze_data_stream_processing_spark.operators.enrich import (
+    make_embedding_udf, make_sentiment_udf,
+)
 from market_analyze_data_stream_processing_spark.operators.pq import pq_encode
 from market_analyze_data_stream_processing_spark.operators.similarity import (
     seed_cell_column, with_ivf_cell,
 )
-kernels = [
-    lambda df: pq_encode(df, {{(0, 0): [1.0, 0.0]}}, m=1, sub_dim=2),
-    lambda df: with_ivf_cell(df, {{0: np.array([1.0, 0.0])}}, "embedding"),
-    lambda df: seed_cell_column(df)[0],
-    lambda df: embedding_near_dup_pairs(df, cells=None),
-]
-contexts = []  # held so no new context reuses a stopped one's id()
-for kernel in kernels:
-    spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
-    contexts.append(spark.sparkContext)
-    df = spark.createDataFrame(
+from market_analyze_data_stream_processing_spark.sources.feed_source import FeedDataSource
+from market_analyze_data_stream_processing_spark.streaming.stateful import obv_per_key_stateful
+
+def vecs(spark):
+    return spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.1], 0)], "vec_id long, embedding array<double>, label int"
     )
-    print(kernel(df).count())
+
+def texts(spark):
+    return spark.createDataFrame([("ACME gains on strong growth",), ("ACME falls",)], "t string")
+
+def feed(spark):
+    spark.dataSource.register(FeedDataSource)
+    return spark.read.format("mads_feed").option("tickers", "MC.PA").option("items_per_ticker", "2").load()
+
+def stateful(spark):
+    src = {str(tmp_path)!r} + "/stream_in"
+    import os
+    os.makedirs(src)
+    with open(src + "/b0.json", "w") as fh:
+        fh.write("\\n".join(json.dumps(r) for r in [
+            {{"key": "A", "seq": 1, "price": 10.0, "vol": 5}},
+            {{"key": "A", "seq": 2, "price": 12.0, "vol": 3}},
+            {{"key": "B", "seq": 1, "price": 5.0, "vol": 1}},
+        ]))
+    stream = spark.readStream.schema("key string, seq long, price double, vol long").json(src)
+    q = (
+        obv_per_key_stateful(stream).writeStream.format("memory").queryName("obv")
+        .outputMode("update").option("checkpointLocation", {str(tmp_path)!r} + "/cp")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(300)
+    return spark.sql("SELECT * FROM obv")
+
+kernels = [
+    lambda spark: pq_encode(vecs(spark), {{(0, 0): [1.0, 0.0]}}, m=1, sub_dim=2),
+    lambda spark: with_ivf_cell(vecs(spark), {{0: np.array([1.0, 0.0])}}, "embedding"),
+    lambda spark: seed_cell_column(vecs(spark))[0],
+    lambda spark: embedding_near_dup_pairs(vecs(spark), cells=None),
+    lambda spark: assign_clusters_arrow(vecs(spark), {{0: np.array([1.0, 0.0]), 1: np.array([0.0, 1.0])}}),
+    lambda spark: texts(spark).select(make_embedding_udf()(F.col("t")).alias("e")),
+    lambda spark: texts(spark).select(make_sentiment_udf()(F.col("t")).alias("s")),
+    feed,
+    stateful,
+]
+for kernel in kernels:
+    spark = (
+        SparkSession.builder.master("local[1]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "1")
+        .getOrCreate()
+    )
+    print(len(kernel(spark).collect()), flush=True)
     spark.stop()
 """
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
-        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True, text=True, timeout=600
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.split() == ["2", "2", "2", "1"]
+    assert out.stdout.split() == ["2", "2", "2", "1", "2", "2", "2", "2", "3"]

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from market_analyze_data_stream_processing_spark.session import ensure_pyfiles
 from market_analyze_data_stream_processing_spark.sources.feed_source import (
     FeedDataSource,
 )
@@ -13,7 +12,6 @@ from market_analyze_data_stream_processing_spark.sources.feed_source import (
 
 @pytest.fixture(scope="module", autouse=True)
 def register(spark):
-    ensure_pyfiles(spark)
     spark.dataSource.register(FeedDataSource)
 
 

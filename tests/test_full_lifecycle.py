@@ -23,7 +23,6 @@ from market_analyze_data_stream_processing_spark.operators.messages import (
 from market_analyze_data_stream_processing_spark.operators.retrieval import RouterQuery
 from market_analyze_data_stream_processing_spark.rag import get_answer
 from market_analyze_data_stream_processing_spark.schemas import NEWS_DOC_SCHEMA
-from market_analyze_data_stream_processing_spark.session import ensure_pyfiles
 from market_analyze_data_stream_processing_spark.sources.feed_source import FeedDataSource
 from market_analyze_data_stream_processing_spark.sources.json_topics import (
     clean_metadata,
@@ -36,7 +35,6 @@ NOW = 1700000400.0
 
 
 def test_full_lifecycle(spark, tmp_path):
-    ensure_pyfiles(spark)
     spark.dataSource.register(FeedDataSource)
 
     # 1. S8 feed source (2 tickers × 2 items) + A1 daily-summary synthesis

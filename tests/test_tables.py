@@ -230,3 +230,30 @@ def test_scan_splits_reads_leaf_node_default_parallelism(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
         spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)
+
+
+def test_every_spread_call_site_passes_a_single_leaf_plan(spark, monkeypatch):
+    """``_scan_splits`` reads ``inputFiles``, which merges the file
+    lists of every relation in the plan: a spread() input with two
+    leaves (a join, a union) would read the parallelism of both. Pin the
+    contract at every call site by building the plan of every registered
+    query (build-time jobs run, nothing else executes) with a
+    ``_scan_splits`` that first checks its frame has exactly one leaf."""
+    from market_analyze_data_stream_processing_spark.cache import unpin_all
+    from market_analyze_data_stream_processing_spark.plans import QUERIES
+    from market_analyze_data_stream_processing_spark.sources import tables
+
+    original = tables._scan_splits
+    seen = []
+
+    def checked(df):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        seen.append(leaves.size())
+        assert leaves.size() == 1, leaves.toString()
+        return original(df)
+
+    monkeypatch.setattr(tables, "_scan_splits", checked)
+    for q in QUERIES.values():
+        q.fn(spark, "/root/testdata/sf0.001")
+        unpin_all(spark)
+    assert seen  # the wrapper saw the call sites
